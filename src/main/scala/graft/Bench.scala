@@ -28,6 +28,25 @@ import org.apache.spark.sql.SparkSession
   *     contaminated rather than the engine regressed. */
 object Bench {
 
+  /** The one STDOUT line: totals, failures, validity evidence and the
+    * SF, never per-entry data — its length does not grow with the
+    * battery. The driver captures it from the sbt log tail, and a line
+    * carrying the per-entry medians map (4.4 KB at 179 entries) was
+    * cut mid-map, so every record from r16 on had "parsed": null.
+    * Per-entry medians, min-of-passes, CPU, lint, exchange counts and
+    * the budget diff live ONLY in bench_out.json, which log capture
+    * cannot truncate. */
+  private[graft] def stdoutLine(total: Double, totalMin: Double,
+                                failedJson: String, remeasuredN: Int,
+                                noise: String, sf: String): String =
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","total_min":$totalMin%.3f,"failed":$failedJson,"remeasured_n":$remeasuredN,$noise,"sf":"$sf"}"""
+
+  /** The validity evidence both output lines carry (see the object
+    * doc), as JSON members. */
+  private[graft] def noiseJson(calibBefore: Double, calibAfter: Double,
+                               wallSec: Double, cpuSec: Double): String =
+    f""""calib_before":$calibBefore%.3f,"calib_after":$calibAfter%.3f,"wall_sec":$wallSec%.3f,"process_cpu_sec":$cpuSec%.3f,"cpu_wall_ratio":${cpuSec / wallSec}%.2f"""
+
   /** Whether the opt-in strict CI gate should exit nonzero. A
     * deliberate re-baseline run (SPARK_GRAFT_WRITE_BUDGET set) just
     * replaced the committed budget with the measured counts — failing
@@ -315,14 +334,9 @@ object Bench {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
         graft.plans.ExchangeBudget.render(actualMap))
     }
-    val noise = f""""calib_before":$calibBefore%.3f,"calib_after":$calibAfter%.3f,"wall_sec":$wallSec%.3f,"process_cpu_sec":$cpuSec%.3f,"cpu_wall_ratio":${cpuSec / wallSec}%.2f"""
-    // STDOUT gets a SHORT line: the driver captures it from the sbt
-    // log tail, and two rounds' records were destroyed when a long
-    // line truncated mid-map ("parsed": null). Medians + totals +
-    // validity evidence fit comfortably; everything per-entry beyond
-    // the medians (min-of-passes, CPU, lint, exchange counts, budget
-    // diff) lives ONLY in the file, which log capture cannot truncate.
-    val shortJson = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"total_min":$totalMin%.3f,"failed":$failedJson,"remeasured_n":${toRecheck.size},$noise,"sf":"$sfDir"}"""
+    val noise = noiseJson(calibBefore, calibAfter, wallSec, cpuSec)
+    val shortJson = stdoutLine(total, totalMin, failedJson, toRecheck.size,
+      noise, sfDir)
     val fullJson = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"queries_min":$qsMin,"queries_cpu":$qsCpu,"lint_errors":$lintCounts,"exchange_counts":$exchangeCounts,"exchange_over_budget":$overJson,"exchange_unbudgeted":$unbudgetedJson,"exchange_budget_stale":$staleJson,"remeasured":$remeasuredJson,"total_min":$totalMin%.3f,"failed":$failedJson,$noise,"sf":"$sfDir"}"""
     println(shortJson)
     java.nio.file.Files.writeString(outPath, fullJson + "\n")

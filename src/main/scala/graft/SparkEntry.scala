@@ -259,13 +259,13 @@ object SparkEntry {
   private def dictAppendBucketedStore(s: SparkSession, d: String): graft.io.DictStore = {
     val path = tmpPath("dictab", d)
     if (new java.io.File(s"$path/_APPENDED").exists())
-      graft.io.DictStore.loadBucketed(s, path)
+      graft.io.DictStore.load(s, path)
     else {
       graft.io.DictStore.encodeBucketed(nationRegion(s, d), path, buckets = 8)
-      graft.io.DictStore.appendBucketed(cust(s, d), path)
-      graft.io.DictStore.compactBucketed(s, path)
+      graft.io.DictStore.append(cust(s, d), path)
+      graft.io.DictStore.compact(s, path)
       new java.io.File(s"$path/_APPENDED").createNewFile()
-      graft.io.DictStore.loadBucketed(s, path)
+      graft.io.DictStore.load(s, path)
     }
   }
 
@@ -297,7 +297,7 @@ object SparkEntry {
   private def dictBucketedStore(s: SparkSession, d: String): graft.io.DictStore = {
     val path = tmpPath("dictbkt", d)
     if (new java.io.File(s"$path/bucketed.json").exists())
-      graft.io.DictStore.loadBucketed(s, path)
+      graft.io.DictStore.load(s, path)
     else graft.io.DictStore.encodeBucketed(
       cust(s, d).union(nationRegion(s, d)), path)
   }
@@ -707,7 +707,7 @@ object SparkEntry {
     },
     "q_dict_append_bucketed" -> { (s, d) =>
       // the bucketed layout's full maintenance lifecycle (round-13):
-      // encodeBucketed + appendBucketed + compactBucketed, then the
+      // encodeBucketed + append + compact, then the
       // q_dict_build join — subject-bucketed star joins still plan
       // shuffle-free after the incremental ingest and the rewrite,
       // and DuckDB certifies the answers

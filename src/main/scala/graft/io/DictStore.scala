@@ -588,17 +588,6 @@ final class DictStore private (val spark: SparkSession,
 
   // ----- id-space block compilation -----
 
-  /** Compile a Scan/Join tree entirely in id space, then join the dict
-    * back in once per kept variable. The flattened leaf order is the
-    * BgpOptimizer's (selectivity-greedy, connected); joins are plain
-    * long equi-joins — every variable in a BGP is assured, so no
-    * compat conditions and no null-safe comparisons are needed. */
-  /** Compile an extended block ([[isExtBlock]]) in id space: pure BGP
-    * sub-blocks reduce as long equi-joins; OPTIONAL becomes a
-    * left-outer join (unmatched right → NULL long ids), MINUS a
-    * left-anti join — both on the shared assured vars, so SPARQL
-    * compat is plain equality. One dict lookup covers the constants
-    * of ALL scans in the spine. */
   /** All constants an extended block's id compilation needs: scan
     * constants plus ConstE terms inside OPTIONAL conditions. */
   private def blockConsts(op: Op): Map[Term, Long] =
@@ -1597,20 +1586,17 @@ final class DictStore private (val spark: SparkSession,
     case _ => Nil
   }
 
-  /** One driver-side dict lookup for ALL constants of the block: a
-    * single filtered scan of the dictionary (pushable term-struct
-    * equality), collected to a Map. A constant absent from the dict
-    * maps to id -1, which no quad carries — the scan legitimately
-    * returns empty. */
-  private def constIds(leaves: List[Scan]): Map[Term, Long] =
-    constIdsOf(scanConstTerms(leaves))
-
   private def scanConstTerms(leaves: List[Scan]): List[Term] =
     leaves.flatMap { sc =>
       List(sc.s, sc.p, sc.o).collect { case T(t) => t } ++
         (sc.g match { case GraphTerm(t) => List(t); case _ => Nil })
     }.distinct
 
+  /** One driver-side dict lookup for ALL constants of the block: a
+    * single filtered scan of the dictionary (pushable term-struct
+    * equality), collected to a Map. A constant absent from the dict
+    * maps to id -1, which no quad carries — the scan legitimately
+    * returns empty. */
   private def constIdsOf(terms: List[Term]): Map[Term, Long] =
     if (terms.isEmpty) Map.empty
     else lookupFrame(terms).collect().flatMap { r =>
@@ -1719,62 +1705,68 @@ final class DictStore private (val spark: SparkSession,
 }
 
 object DictStore {
+  import graft.sparql.QuadsStats
+  import java.nio.charset.StandardCharsets.UTF_8
+  import org.apache.hadoop.fs.{Path => HPath}
 
-  /** Scale-adaptive write partition count for the PLAIN store layouts
-    * (round-20, guide §6): size output files toward
-    * `spark.graft.store.targetFileBytes` (default 128 MB) using the
-    * optimizer's size estimate, clamped to [1, shuffle.partitions].
-    * A fixed `shuffle.partitions`-way write scattered a 6 MB store
-    * over 32 ~180 KB files of ~12 row groups each; every later scan
-    * then paid 32 tasks x per-task reader setup x 12 per-row-group
-    * inits — measured 4.2x the CPU of the same scan over sensibly
-    * sized files. At scale the estimate grows and the count rises
-    * toward shuffle.partitions, so production stores keep many
-    * target-sized files. Bucketed layouts are untouched — their
+  /** Output file size every plain-layout store write aims for (a
+    * constant, not a setting). A fixed `shuffle.partitions`-way write
+    * scattered a 6 MB store over 32 ~180 KB files of ~12 row groups
+    * each; every later scan then paid 32 tasks x per-task reader setup
+    * x 12 per-row-group inits — measured 4.2x the CPU of the same scan
+    * over sensibly sized files. */
+  private val TargetFileBytes = 128L * 1024 * 1024
+
+  /** Scale-adaptive write partition count for the PLAIN store layouts:
+    * the optimizer's size estimate of `df` over [[TargetFileBytes]],
+    * through the one sizing rule ([[Layout.fileCount]]), clamped to
+    * [1, shuffle.partitions]. At scale the estimate grows and the
+    * count rises toward shuffle.partitions, so production stores keep
+    * many target-sized files. Bucketed layouts are untouched — their
     * bucket count is the layout contract that buys shuffle-free
     * joins. */
-  private def sizedParts(df: DataFrame): Int = {
-    val spark = df.sparkSession
-    val target = spark.conf.getOption("spark.graft.store.targetFileBytes")
-      .map(_.toLong).getOrElse(128L * 1024 * 1024)
-    val cap = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val n = est / target + (if (est % target == 0) 0 else 1)
-    if (n < 1) 1 else if (n > cap) cap else n.toInt
-  }
+  private def sizedParts(df: DataFrame): Int =
+    Layout.fileCount(df.queryExecution.optimizedPlan.stats.sizeInBytes,
+      TargetFileBytes,
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
 
-  /** One-time ingest: build the dictionary over every distinct term of
-    * `quads`, encode the four positions to long ids, and persist both
-    * under `path`. The four encode joins are the one-time cost that
-    * buys every later query its narrow joins; AQE broadcasts the dict
-    * side when it fits. */
+  private def zstd(df: DataFrame, mode: SaveMode) =
+    df.write.mode(mode).option("compression", "zstd")
+
+  /** The plain quads layout: hash(p, s) partitions, (p, s)-sorted. */
+  private def psSorted(df: DataFrame, parts: Int): DataFrame =
+    df.repartition(parts, col("p"), col("s")).sortWithinPartitions("p", "s")
+
+  /** The lex-clustered dict layout: range-partitioned and sorted by
+    * `term.lex`, so files carry tight lex min/max for lookup pruning
+    * (see [[DictStore.lookupFrame]]). */
+  private def lexSorted(df: DataFrame, parts: Int): DataFrame =
+    df.repartitionByRange(parts, col("term.lex"))
+      .sortWithinPartitions(col("term.lex"))
+
+  /** One-time ingest into the PLAIN layout: build the dictionary over
+    * every distinct term of `quads`, encode the four positions to long
+    * ids, and persist both under `path`. The four encode joins are the
+    * one-time cost that buys every later query its narrow joins; AQE
+    * broadcasts the dict side when it fits. [[encodeBucketed]] is the
+    * other layout; every later operation ([[load]], [[append]],
+    * [[compact]]) reads the layout from the store itself. */
   def encode(quads: DataFrame, path: String): DictStore = {
     val spark = quads.sparkSession
-    // ids assigned once, then frozen by the write: everything downstream
-    // (including the quads encode below) reads the PERSISTED dict, so
-    // monotonically_increasing_id's task-retry nondeterminism can never
-    // produce two views of the same id space. CRITICAL: no shuffle may
-    // sit between the id assignment and the write — the assignment
-    // stage must BE the write stage, so each task's (id, term) file is
-    // internally consistent and exactly one attempt per task commits.
-    // (The lex range-partition + sort sit BEFORE the assignment inside
-    // that same stage: they make per-query constant lookups prune by
-    // row-group lex ranges — see [[DictStore.lookupFrame]].)
+    // everything downstream (including the quads encode below) reads
+    // the PERSISTED dict, so ids are frozen before use — see [[writeIds]]
     val parts = sizedParts(quads)
-    lexClusteredIds(quads, parts)
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .parquet(s"$path/dict")
-    val dict = spark.read.parquet(s"$path/dict")
-    encodeIds(quads, dict)
-      .repartition(parts, col("p"), col("s"))
-      .sortWithinPartitions("p", "s")
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .parquet(s"$path/quads")
+    writeIds(distinctTerms(quads), parts, 0L, s"$path/dict", SaveMode.Overwrite)
+    zstd(psSorted(encodeIds(quads, spark.read.parquet(s"$path/dict")), parts),
+      SaveMode.Overwrite).parquet(s"$path/quads")
     // ANALYZE at ingest: per-predicate stats for cost-based join
     // ordering, persisted as a sidecar so every later load gets them
     // free (the one groupBy here is noise next to the encode joins)
-    graft.sparql.QuadsStats.write(spark,
-      graft.sparql.QuadsStats.compute(quads), s"$path/stats")
+    QuadsStats.write(spark, QuadsStats.compute(quads), s"$path/stats")
+    // a plain re-encode over a former bucketed store drops its marker,
+    // so the layout dispatch sees what was just written
+    val (fs, marker) = hadoopFs(spark, s"$path/bucketed.json")
+    fs.delete(marker, false)
     load(spark, path)
   }
 
@@ -1787,16 +1779,22 @@ object DictStore {
       .unionByName(quads.filter(col("g").isNotNull).select(col("g").as("term")))
       .distinct()
 
-  /** The frozen-id dict frame both ingest layouts write: distinct
-    * terms range-partitioned and sorted by `term.lex` (so files carry
-    * tight lex min/max for lookup pruning), with ids assigned INSIDE
-    * the write stage (after the range shuffle — see the retry-safety
-    * comments at the call sites). */
-  private def lexClusteredIds(quads: DataFrame, parts: Int): DataFrame =
-    distinctTerms(quads)
-      .repartitionByRange(parts, col("term.lex"))
-      .sortWithinPartitions(col("term.lex"))
-      .select(monotonically_increasing_id().as("id"), col("term"))
+  /** The one id-freezing dict writer ([[encode]], [[encodeBucketed]],
+    * [[append]]): `terms` lex-clustered ([[lexSorted]]), with ids
+    * `base + monotonically_increasing_id` assigned INSIDE the write
+    * stage and written to `out`. CRITICAL: no shuffle may sit between
+    * the id assignment and the write — the assignment stage must BE
+    * the write stage, so each task's (id, term) file is internally
+    * consistent and exactly one attempt per task commits;
+    * monotonically_increasing_id's task-retry nondeterminism can then
+    * never produce two views of the same id space. (The lex range
+    * partition and sort sit BEFORE the assignment inside that same
+    * stage.) */
+  private def writeIds(terms: DataFrame, parts: Int, base: Long,
+                       out: String, mode: SaveMode): Unit =
+    zstd(lexSorted(terms, parts)
+      .select((monotonically_increasing_id() + lit(base)).as("id"),
+        col("term")), mode).parquet(out)
 
   /** The four encode joins against a FROZEN dict (s/p/o inner, g left
     * outer), plus the TYPED OBJECT SIDECAR: four narrow columns
@@ -1871,72 +1869,102 @@ object DictStore {
         tsCols: _*)
   }
 
-  /** Open a persisted store (stats sidecar optional — stores written
-    * before ANALYZE-at-ingest still load, with structural ordering). */
-  def load(spark: SparkSession, path: String): DictStore =
+  /** Open a persisted store of either layout: the layout comes from
+    * the store itself ([[bucketCount]]). A bucketed store re-attaches
+    * its catalog tables if this session lacks them ([[table]]) and
+    * keeps its lex-clustered lookup sidecar (absent on stores written
+    * before it existed — the bucketed table answers lookups unpruned
+    * then). The stats sidecar is optional: stores written before
+    * ANALYZE-at-ingest still load, with structural ordering. */
+  def load(spark: SparkSession, path: String): DictStore = {
+    val buckets = bucketCount(spark, path)
     new DictStore(spark,
-      spark.read.parquet(s"$path/dict"),
-      spark.read.parquet(s"$path/quads"),
-      try Some(graft.sparql.QuadsStats.read(spark, s"$path/stats"))
+      table(spark, path, "dict", buckets), table(spark, path, "quads", buckets),
+      readStats(spark, path),
+      if (buckets.isEmpty) None
+      else try Some(spark.read.parquet(s"$path/dict_by_lex"))
       catch { case _: org.apache.spark.sql.AnalysisException => None })
+  }
 
-  /** Incremental ingest: append `quads` to the persisted store at
-    * `path` WITHOUT rewriting what's there — the 100 TB maintenance
-    * op for a growing corpus. Terms already in the dictionary keep
-    * their ids; unseen terms get fresh ids ABOVE the current ceiling
-    * (offset + the same in-write-stage assignment rule as encode, so
-    * task retries cannot fork the id space), written as NEW dict
-    * files. The encoded quads (typed sidecar included) land as new
-    * files under the same (p, s) partition scheme, and the stats
-    * sidecar merges additively ([[graft.sparql.QuadsStats.merge]] —
-    * counts exact, ndv union-bounded). Queries against the appended
-    * store match a from-scratch encode of the union exactly: ids
-    * differ, results cannot, because ids never leave the store.
+  /** Incremental ingest into a store of either layout: append `quads`
+    * to the persisted store at `path` WITHOUT rewriting what's there —
+    * the 100 TB maintenance op for a growing corpus. Terms already in
+    * the dictionary keep their ids; unseen terms get fresh ids ABOVE
+    * the current ceiling through the same id-freezing writer as
+    * [[encode]] ([[writeIds]] with the ceiling as base), written as NEW
+    * dict files (into `dict_by_lex` for a bucketed store). The encoded
+    * quads (typed sidecar included) land as new files under the
+    * layout's partition scheme — batch-sized toward the constant
+    * 128 MB file target for the plain layout, one file per bucket for
+    * the bucketed one — and the stats sidecar merges additively
+    * ([[QuadsStats.merge]] — counts exact, ndv union-bounded). Queries
+    * against the appended store match a from-scratch encode of the
+    * union exactly: ids differ, results cannot, because ids never
+    * leave the store.
+    *
+    * Bucketed stores take a second phase: the frozen new dict rows
+    * route into the id-bucketed dict table and the encoded quads into
+    * the s-bucketed quads table as APPENDED bucket files. Spark keeps
+    * bucket pruning and shuffle-free joins across appends; with more
+    * than one file per bucket it just stops assuming per-bucket
+    * sortedness, which [[compact]] restores (offline: compaction is
+    * not atomic for concurrent readers, and a re-run after a crash
+    * restores the pre-compaction copy).
     *
     * Crash consistency is job-granular and self-healing: a dict
     * append that committed without its quads append is re-absorbed on
     * retry (the anti-join finds those terms present and reuses their
-    * ids); a failed quads job leaves nothing visible.
+    * ids; the bucketed phase 2 derives its rows by anti-joining
+    * `dict_by_lex` against the bucketed dict, not from the batch); a
+    * failed quads job leaves nothing visible. Re-running a
+    * FULLY-committed append re-adds the batch (bag semantics: quad
+    * multiplicity is data, the store cannot tell a retry from a
+    * genuine re-ingest).
     *
-    * Plain-parquet layout only ([[appendBucketed]] is the bucketed
-    * twin); pre-v5 stores (`o_dec`
-    * sidecar) must re-encode first, and a store carrying `o_ts`
-    * (UTC-encoded) requires a UTC append session — appends never mix
-    * sidecar schemas inside one directory. */
+    * Pre-v5 stores (`o_dec` sidecar) must re-encode first, and a store
+    * carrying `o_ts` (UTC-encoded) requires a UTC append session —
+    * appends never mix sidecar schemas inside one directory. */
   def append(quads: DataFrame, path: String): DictStore = {
     val spark = quads.sparkSession
-    require(!bucketedMarkerExists(spark, path),
-      s"$path is a bucketed store: use DictStore.appendBucketed")
-    val existing = spark.read.parquet(s"$path/quads")
+    val buckets = bucketCount(spark, path)
+    val existing = table(spark, path, "quads", buckets)
     require(existing.columns.contains("o_num"),
       s"$path is a pre-v5 store (o_dec sidecar): re-encode before appending")
     require(!existing.columns.contains("o_ts") ||
         spark.sessionState.conf.sessionLocalTimeZone == "UTC",
       s"$path carries o_ts (UTC-encoded): append needs a UTC session")
-    val dict0 = spark.read.parquet(s"$path/dict")
-    val base = dict0.agg(max(col("id"))).head().getLong(0) + 1L
+    val lexDir = s"$path/${if (buckets.isEmpty) "dict" else "dict_by_lex"}"
+    val dict0 = spark.read.parquet(lexDir)
     val parts = sizedParts(quads) // batch-sized, not a fixed fan-out
-    distinctTerms(quads)
+    val unseen = distinctTerms(quads)
       .join(dict0.select(col("term")), Seq("term"), "left_anti")
-      .repartitionByRange(parts, col("term.lex"))
-      .sortWithinPartitions(col("term.lex"))
-      .select((monotonically_increasing_id() + lit(base)).as("id"),
-        col("term"))
-      .write.mode(SaveMode.Append).option("compression", "zstd")
-      .parquet(s"$path/dict")
-    val dict = spark.read.parquet(s"$path/dict")
-    encodeIds(quads, dict)
-      .select(existing.columns.map(col).toIndexedSeq: _*) // schema-exact
-      .repartition(parts, col("p"), col("s"))
-      .sortWithinPartitions("p", "s")
-      .write.mode(SaveMode.Append).option("compression", "zstd")
-      .parquet(s"$path/quads")
+    writeIds(unseen, parts, dict0.agg(max(col("id"))).head().getLong(0) + 1L,
+      lexDir, SaveMode.Append)
+    spark.catalog.refreshByPath(lexDir)
+    val schema = existing.columns.map(col).toIndexedSeq // schema-exact
+    buckets match {
+      case None =>
+        zstd(psSorted(encodeIds(quads, spark.read.parquet(lexDir)).select(schema: _*),
+          parts), SaveMode.Append).parquet(s"$path/quads")
+      case Some(n) =>
+        val base = tableBase(spark, path)
+        def dict = table(spark, path, "dict", buckets)
+        // phase 2 self-heals: whatever the lex copy has that the bucketed
+        // table lacks routes in, whether frozen by this call or a dead one
+        bucketedWrite(spark.read.parquet(lexDir)
+            .join(dict.select(col("id")), Seq("id"), "left_anti"),
+          n, "dict", s"$path/dict", s"${base}_dict", SaveMode.Append)
+        spark.catalog.refreshTable(s"${base}_dict")
+        bucketedWrite(encodeIds(quads, dict).select(schema: _*),
+          n, "quads", s"$path/quads", s"${base}_quads", SaveMode.Append)
+        spark.catalog.refreshTable(s"${base}_quads")
+    }
     // legacy stores (written before the stats sidecar existed) stay
     // sidecar-less — consistent with load()'s tolerance; writing
     // batch-only stats here would silently undercount the store
     readStats(spark, path).foreach { prior =>
-      graft.sparql.QuadsStats.write(spark, graft.sparql.QuadsStats.merge(
-        prior, graft.sparql.QuadsStats.compute(quads)), s"$path/stats")
+      QuadsStats.write(spark,
+        QuadsStats.merge(prior, QuadsStats.compute(quads)), s"$path/stats")
     }
     // drop any cached listings of the grown directories (the session
     // file-status cache otherwise serves the pre-append file set)
@@ -1945,197 +1973,134 @@ object DictStore {
     load(spark, path)
   }
 
-  /** Compact a PLAIN store after appends. Each [[append]] lands one
-    * file set per batch, so file counts grow linearly with batches
-    * and the dict's lex-range file pruning loosens (a term range now
-    * spans one file per batch). This rewrites the quads back to the
-    * encode layout — hash(p, s) partitions, (p, s)-sorted files — and
-    * the dictionary back to tight lex-range files. Ids are FROZEN
-    * rows here, so the rewrite is pure movement; nothing is
-    * reassigned. The directory swap (write `<sub>_compacting`, rename
-    * live → `<sub>_old`, rename new → live, delete old) is NOT
-    * atomic: run it offline, like every table-maintenance op here. A
-    * dead previous run's leftovers are cleared on entry. */
+  /** Compact a store of either layout after appends. Each [[append]]
+    * lands one file set per batch, so file counts grow linearly with
+    * batches and the dict's lex-range file pruning loosens (a term
+    * range now spans one file per batch). This rewrites every table
+    * back to its encode layout: plain quads to hash(p, s) partitions
+    * of (p, s)-sorted files and the dictionary (a bucketed store's
+    * `dict_by_lex` too) to tight lex-range files, both sized toward
+    * the constant 128 MB file target; bucketed tables to one sorted
+    * file per bucket. Ids are FROZEN rows here, so the rewrite is pure
+    * movement; nothing is reassigned.
+    *
+    * Contract: compaction is NOT atomic for concurrent readers — run
+    * it offline, like every table-maintenance op here. Each table
+    * goes through the one directory [[swap]], so a re-run after a
+    * crash restores the pre-compaction copy of any table the crash
+    * left between its two renames, then compacts as usual. A bucketed
+    * store's catalog entries are dropped (external tables: the files
+    * survive) and re-created over the new files by [[load]]. */
   def compact(spark: SparkSession, path: String): Unit = {
-    require(!bucketedMarkerExists(spark, path),
-      s"$path is a bucketed store: its files are catalog-owned; re-encode")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def swapWrite(sub: String)(write: (DataFrame, String) => Unit): Unit = {
-      val live = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val fs = live.getFileSystem(hconf)
-      val tmp = new org.apache.hadoop.fs.Path(s"$path/${sub}_compacting")
-      val old = new org.apache.hadoop.fs.Path(s"$path/${sub}_old")
-      fs.delete(tmp, true); fs.delete(old, true) // dead-run leftovers
-      write(spark.read.parquet(live.toString), tmp.toString)
-      require(fs.rename(live, old), s"swap failed: $live -> $old")
-      require(fs.rename(tmp, live), s"swap failed: $tmp -> $live")
-      fs.delete(old, true)
-      spark.catalog.refreshByPath(live.toString)
-    }
-    swapWrite("quads") { (df, out) =>
-      df.repartition(sizedParts(df), col("p"), col("s"))
-        .sortWithinPartitions("p", "s")
-        .write.option("compression", "zstd").parquet(out)
-    }
-    swapWrite("dict") { (df, out) =>
-      df.repartitionByRange(sizedParts(df), col("term.lex"))
-        .sortWithinPartitions(col("term.lex"))
-        .write.option("compression", "zstd").parquet(out)
+    def lexFiles(df: DataFrame, out: String): Unit =
+      zstd(lexSorted(df, sizedParts(df)), SaveMode.Overwrite).parquet(out)
+    bucketCount(spark, path) match {
+      case None =>
+        swap(spark, path, "quads") { (df, out) =>
+          zstd(psSorted(df, sizedParts(df)), SaveMode.Overwrite).parquet(out)
+        }
+        swap(spark, path, "dict")(lexFiles)
+      case Some(n) =>
+        val base = tableBase(spark, path)
+        for (sub <- Seq("quads", "dict")) {
+          spark.sql(s"DROP TABLE IF EXISTS ${base}_$sub")
+          // the swap reads the FILES, not the catalog table: a
+          // bucketed-scan child lets the optimizer drop the repartition
+          // below the bucketed write, and the surviving task layout need
+          // not align rows to one task per bucket — a plain parquet scan
+          // keeps the shuffle, whose hash IS the bucket-id hash, giving
+          // one file per bucket
+          swap(spark, path, sub) { (df, out) =>
+            spark.sql(s"DROP TABLE IF EXISTS ${base}_${sub}_cmp")
+            bucketedWrite(df, n, sub, out, s"${base}_${sub}_cmp",
+              SaveMode.ErrorIfExists)
+            spark.sql(s"DROP TABLE ${base}_${sub}_cmp") // external: files stay
+          }
+        }
+        swap(spark, path, "dict_by_lex")(lexFiles)
+        load(spark, path) // re-create the catalog entries
     }
   }
 
-  /** [[compact]] for the BUCKETED layout. [[appendBucketed]] adds one
-    * file per bucket per batch; Spark keeps bucket pruning and
-    * shuffle-free joins across that, but stops assuming per-bucket
-    * SORTEDNESS once a bucket holds more than one file — this rewrite
-    * restores one sorted file per bucket for both tables (and tight
-    * lex files for `dict_by_lex`). The catalog tables are EXTERNAL,
-    * so the dance is: write a temp table with the same bucket spec
-    * next to the live directory, drop the catalog entries (files
-    * survive), swap the directories, and let [[loadBucketed]]
-    * re-create the entries over the new files. Not atomic — offline
-    * maintenance, like every rewrite op here. */
-  def compactBucketed(spark: SparkSession, path: String): Unit = {
-    val buckets = """"buckets"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readTextFile(spark, s"$path/bucketed.json"))
-      .map(_.group(1).toInt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$path/bucketed.json: no bucket count — not a bucketed store"))
-    loadBucketed(spark, path)
-    val base = tableBase(path)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def swapTable(sub: String, table: String, bucketCol: String,
-                  sortCols: Seq[String]): Unit = {
-      val live = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val fs = live.getFileSystem(hconf)
-      val tmp = new org.apache.hadoop.fs.Path(s"$path/${sub}_compacting")
-      val old = new org.apache.hadoop.fs.Path(s"$path/${sub}_old")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_cmp")
-      fs.delete(tmp, true); fs.delete(old, true) // dead-run leftovers
-      // read the FILES, not the catalog table: a bucketed-scan child
-      // lets the optimizer drop the repartition below the bucketed
-      // write, and the surviving task layout need not align rows to
-      // one task per bucket — a plain parquet scan keeps the shuffle,
-      // whose hash IS the bucket-id hash, giving one file per bucket
-      spark.read.parquet(live.toString)
-        .repartition(buckets, col(bucketCol))
-        .write.option("compression", "zstd")
-        .option("path", tmp.toString)
-        .bucketBy(buckets, bucketCol)
-        .sortBy(sortCols.head, sortCols.tail: _*)
-        .saveAsTable(s"${table}_cmp")
-      // drop BOTH catalog entries (external: files stay), swap dirs
-      spark.sql(s"DROP TABLE ${table}_cmp")
-      spark.sql(s"DROP TABLE $table")
-      require(fs.rename(live, old), s"swap failed: $live -> $old")
-      require(fs.rename(tmp, live), s"swap failed: $tmp -> $live")
-      fs.delete(old, true)
-    }
-    swapTable("quads", s"${base}_quads", "s", Seq("p", "s"))
-    swapTable("dict", s"${base}_dict", "id", Seq("id"))
-    // the lex copy compacts like the plain layout's dictionary
-    val lexLive = new org.apache.hadoop.fs.Path(s"$path/dict_by_lex")
-    val lfs = lexLive.getFileSystem(hconf)
-    val lexTmp = new org.apache.hadoop.fs.Path(s"$path/dict_by_lex_compacting")
-    val lexOld = new org.apache.hadoop.fs.Path(s"$path/dict_by_lex_old")
-    lfs.delete(lexTmp, true); lfs.delete(lexOld, true)
-    val lexDf = spark.read.parquet(lexLive.toString)
-    lexDf
-      .repartitionByRange(sizedParts(lexDf), col("term.lex"))
-      .sortWithinPartitions(col("term.lex"))
-      .write.option("compression", "zstd").parquet(lexTmp.toString)
-    require(lfs.rename(lexLive, lexOld), s"swap failed: $lexLive")
-    require(lfs.rename(lexTmp, lexLive), s"swap failed: $lexTmp")
-    lfs.delete(lexOld, true)
-    spark.catalog.refreshByPath(s"$path/dict_by_lex")
-    loadBucketed(spark, path) // re-create the catalog entries
-    ()
-  }
-
-  /** [[append]] for the BUCKETED layout — incremental ingest for the
-    * 100 TB shape. Phase 1 freezes unseen-term ids in `dict_by_lex`
-    * exactly like [[append]] (offset above the ceiling, in-write-stage
-    * assignment). Phase 2 routes the frozen new rows into the
-    * id-bucketed dict table and the encoded quads into the s-bucketed
-    * quads table as APPENDED bucket files — Spark accepts appends that
-    * repeat the table's bucket spec; bucket pruning and shuffle-free
-    * joins survive (with >1 file per bucket Spark just stops assuming
-    * per-bucket sortedness, which only the sort-merge fast path used).
-    * Phase 2 derives its row set by ANTI-JOINING `dict_by_lex` against
-    * the bucketed dict, NOT from this call's batch — so a phase-1
-    * commit whose phase 2 died is healed by the retry. Re-running a
-    * FULLY-committed append re-adds the batch (bag semantics: quad
-    * multiplicity is data, the store cannot distinguish a retry from
-    * a genuine re-ingest) — same contract as [[append]]. */
-  def appendBucketed(quads: DataFrame, path: String): DictStore = {
-    val spark = quads.sparkSession
-    val buckets = """"buckets"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readTextFile(spark, s"$path/bucketed.json"))
-      .map(_.group(1).toInt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$path/bucketed.json: no bucket count — not a bucketed store"))
-    loadBucketed(spark, path) // attach catalog tables if absent
-    val base = tableBase(path)
-    val existing = spark.table(s"${base}_quads")
-    require(existing.columns.contains("o_num"),
-      s"$path is a pre-v5 store (o_dec sidecar): re-encode before appending")
-    require(!existing.columns.contains("o_ts") ||
-        spark.sessionState.conf.sessionLocalTimeZone == "UTC",
-      s"$path carries o_ts (UTC-encoded): append needs a UTC session")
-    val parts = sizedParts(quads) // batch-sized, not a fixed fan-out
-    val dictLex0 = spark.read.parquet(s"$path/dict_by_lex")
-    val base0 = dictLex0.agg(max(col("id"))).head().getLong(0) + 1L
-    distinctTerms(quads)
-      .join(dictLex0.select(col("term")), Seq("term"), "left_anti")
-      .repartitionByRange(parts, col("term.lex"))
-      .sortWithinPartitions(col("term.lex"))
-      .select((monotonically_increasing_id() + lit(base0)).as("id"),
-        col("term"))
-      .write.mode(SaveMode.Append).option("compression", "zstd")
-      .parquet(s"$path/dict_by_lex")
-    spark.catalog.refreshByPath(s"$path/dict_by_lex")
-    // phase 2 self-heals: whatever the lex copy has that the bucketed
-    // table lacks routes in, whether frozen by this call or a dead one
-    spark.read.parquet(s"$path/dict_by_lex")
-      .join(spark.table(s"${base}_dict").select(col("id")),
-        Seq("id"), "left_anti")
-      .repartition(buckets, col("id"))
-      .write.mode(SaveMode.Append).option("compression", "zstd")
-      .option("path", s"$path/dict")
-      .bucketBy(buckets, "id").sortBy("id")
-      .saveAsTable(s"${base}_dict")
-    spark.catalog.refreshTable(s"${base}_dict")
-    encodeIds(quads, spark.table(s"${base}_dict"))
-      .select(existing.columns.map(col).toIndexedSeq: _*) // schema-exact
-      .repartition(buckets, col("s"))
-      .write.mode(SaveMode.Append).option("compression", "zstd")
-      .option("path", s"$path/quads")
-      .bucketBy(buckets, "s").sortBy("p", "s")
-      .saveAsTable(s"${base}_quads")
-    spark.catalog.refreshTable(s"${base}_quads")
-    // same legacy-store tolerance as the plain-layout append
-    readStats(spark, path).foreach { prior =>
-      graft.sparql.QuadsStats.write(spark, graft.sparql.QuadsStats.merge(
-        prior, graft.sparql.QuadsStats.compute(quads)), s"$path/stats")
-    }
-    loadBucketed(spark, path)
+  /** The one directory swap of [[compact]]: `write` rewrites the live
+    * `path/sub` into `<sub>_compacting`, then live is renamed to
+    * `<sub>_old`, the new copy to live, and `<sub>_old` is deleted.
+    * Not atomic for concurrent readers. On entry a run that died
+    * between the two renames (no live `<sub>`, a complete `<sub>_old`)
+    * is undone by restoring `<sub>_old` BEFORE the dead run's
+    * leftovers are cleared — a re-run never deletes the only copy. */
+  private def swap(spark: SparkSession, path: String, sub: String)(
+      write: (DataFrame, String) => Unit): Unit = {
+    val (fs, live) = hadoopFs(spark, s"$path/$sub")
+    val tmp = new HPath(s"$path/${sub}_compacting")
+    val old = new HPath(s"$path/${sub}_old")
+    if (!fs.exists(live) && fs.exists(old))
+      require(fs.rename(old, live), s"restore failed: $old -> $live")
+    fs.delete(tmp, true); fs.delete(old, true) // dead-run leftovers
+    write(spark.read.parquet(live.toString), tmp.toString)
+    require(fs.rename(live, old), s"swap failed: $live -> $old")
+    require(fs.rename(tmp, live), s"swap failed: $tmp -> $live")
+    fs.delete(old, true)
+    spark.catalog.refreshByPath(live.toString)
   }
 
   // ----- bucketed layout -----
 
+  /** Bucketed layout per table: bucket column, sort columns, and the
+    * columns a re-attach declares. */
+  private val bucketSpec = Map(
+    "dict" -> ("id", Seq("id"), s"id BIGINT, term ${TermSchema.termType.sql}"),
+    "quads" -> ("s", Seq("p", "s"), "s BIGINT, p BIGINT, o BIGINT, g BIGINT"))
+
+  /** Write `df` as bucketed table `name` with data at `dir`, under the
+    * [[bucketSpec]] of `sub`. The repartition's hash IS the bucket-id
+    * hash, so each bucket lands as one file per write. */
+  private def bucketedWrite(df: DataFrame, buckets: Int, sub: String,
+                            dir: String, name: String, mode: SaveMode): Unit = {
+    val (by, sort, _) = bucketSpec(sub)
+    zstd(df.repartition(buckets, col(by)), mode).option("path", dir)
+      .bucketBy(buckets, by).sortBy(sort.head, sort.tail: _*)
+      .saveAsTable(name)
+  }
+
   /** Catalog identifier for a bucketed store's tables: derived from the
-    * store path so re-attach is deterministic, suffixed to keep two
-    * paths with the same sanitized form apart. */
-  private def tableBase(path: String): String = {
-    val clean = path.replaceAll("[^A-Za-z0-9_]", "_").toLowerCase
+    * store path QUALIFIED through its filesystem (so `/x` and `file:/x`
+    * name the same tables) to keep re-attach deterministic, suffixed to
+    * keep two paths with the same sanitized form apart. */
+  private def tableBase(spark: SparkSession, path: String): String = {
+    val (fs, hp) = hadoopFs(spark, path)
+    val q = fs.makeQualified(hp).toString
+    val clean = q.replaceAll("[^A-Za-z0-9_]", "_").toLowerCase
     val tail = if (clean.length > 96) clean.takeRight(96) else clean
-    f"graft_bkt_${tail}_${path.hashCode & 0x7fffffff}%08x"
+    f"graft_bkt_${tail}_${q.hashCode & 0x7fffffff}%08x"
+  }
+
+  /** One table of a store: the parquet directory `path/sub` for a plain
+    * store; for a bucketed one the catalog table, re-created as an
+    * (external) entry over the existing files when this session lacks
+    * it — the bucket spec in the CREATE must match the writer's for
+    * Spark to trust the file-name bucket ids, which `bucketed.json`
+    * guarantees. In production this catalog is the metastore. */
+  private def table(spark: SparkSession, path: String, sub: String,
+                    buckets: Option[Int]): DataFrame = buckets match {
+    case None => spark.read.parquet(s"$path/$sub")
+    case Some(n) =>
+      val name = s"${tableBase(spark, path)}_$sub"
+      val (by, sort, cols) = bucketSpec(sub)
+      if (!spark.catalog.tableExists(name))
+        spark.sql(
+          s"""CREATE TABLE $name ($cols) USING PARQUET
+             |CLUSTERED BY ($by) SORTED BY (${sort.mkString(", ")}) INTO $n BUCKETS
+             |LOCATION '$path/$sub'""".stripMargin)
+      spark.table(name)
   }
 
   /** One-time ingest into a BUCKETED layout — the 100 TB shape of the
-    * store. Two differences from [[encode]]'s plain-parquet layout,
-    * both invisible to query semantics (the class runs unchanged over
-    * the catalog tables):
+    * store, and with [[encode]] the one place a caller picks a layout:
+    * [[load]], [[append]] and [[compact]] serve both, reading the
+    * layout from `path/bucketed.json`. Two differences from the plain
+    * layout, both invisible to query semantics (the class runs
+    * unchanged over the catalog tables):
     *
     *  - `dict` is bucketed on `id`: every late-materialization join
     *    (and the [[DictStore.decodedQuads]] view) joins the dictionary
@@ -2151,19 +2116,21 @@ object DictStore {
     *    within-bucket `(p, s)` sort keeps constant-predicate row-group
     *    pruning as tight as the plain layout's `(p, s)` clustering.
     *
+    * The bucket count is the file layout here (one file per bucket per
+    * write); only the lex-clustered `dict_by_lex` copy is sized toward
+    * the constant 128 MB file target. [[compact]] brings both back to
+    * that shape after appends; it is not atomic for concurrent readers,
+    * and a re-run after a crash restores the pre-compaction copy.
     * Spark's bucketing metadata lives in the session catalog, so the
     * tables register under a path-derived name with their data at
-    * `path/{dict,quads}` (external) — [[loadBucketed]] re-attaches a
-    * fresh session to the same files. In production this catalog is the
-    * metastore; locally it is the session's, and re-attach recreates
-    * the table entries from the layout metadata persisted in
-    * `path/bucketed.json`. */
+    * `path/{dict,quads}` (external) — [[load]] re-attaches a fresh
+    * session to the same files. */
   def encodeBucketed(quads: DataFrame, path: String,
                      buckets: Int = 32): DictStore = {
     val spark = quads.sparkSession
-    val base = tableBase(path)
+    val base = tableBase(spark, path)
     // TWO-phase dict write. Ids must freeze in a write whose stage IS
-    // the assignment stage (see encode()): with a repartition between
+    // the assignment stage ([[writeIds]]): with a repartition between
     // monotonically_increasing_id and the bucketed write, an upstream
     // stage retry would re-assign ids for rows routed to not-yet-
     // committed bucket files while already-committed files keep the
@@ -2173,122 +2140,59 @@ object DictStore {
     // phase-1 copy is lex-clustered and KEPT as `dict_by_lex`: it is
     // the pruned per-query constant-lookup side (the id-bucketed table
     // has no lex locality), and its ids are identical by construction.
-    lexClusteredIds(quads, sizedParts(quads))
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .parquet(s"$path/dict_by_lex")
-    spark.read.parquet(s"$path/dict_by_lex")
-      .repartition(buckets, col("id"))
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .option("path", s"$path/dict")
-      .bucketBy(buckets, "id").sortBy("id")
-      .saveAsTable(s"${base}_dict")
-    val dict = spark.table(s"${base}_dict")
+    writeIds(distinctTerms(quads), sizedParts(quads), 0L,
+      s"$path/dict_by_lex", SaveMode.Overwrite)
+    bucketedWrite(spark.read.parquet(s"$path/dict_by_lex"), buckets, "dict",
+      s"$path/dict", s"${base}_dict", SaveMode.Overwrite)
     // the encode-join output is a deterministic row set and the
     // repartition routes by hash(s) — no assignment nondeterminism, so
     // the quads can bucket in one pass
-    encodeIds(quads, dict)
-      .repartition(buckets, col("s"))
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .option("path", s"$path/quads")
-      .bucketBy(buckets, "s").sortBy("p", "s")
-      .saveAsTable(s"${base}_quads")
-    graft.sparql.QuadsStats.write(spark,
-      graft.sparql.QuadsStats.compute(quads), s"$path/stats")
-    writeTextFile(spark, s"$path/bucketed.json", s"""{"buckets": $buckets}""")
-    loadBucketed(spark, path)
+    bucketedWrite(encodeIds(quads, spark.table(s"${base}_dict")), buckets,
+      "quads", s"$path/quads", s"${base}_quads", SaveMode.Overwrite)
+    QuadsStats.write(spark, QuadsStats.compute(quads), s"$path/stats")
+    val (fs, marker) = hadoopFs(spark, s"$path/bucketed.json")
+    val out = fs.create(marker, true)
+    try out.write(s"""{"buckets": $buckets}""".getBytes(UTF_8)) finally out.close()
+    load(spark, path)
   }
 
-  /** Re-attach a bucketed store: if the catalog already has the
-    * tables, use them; otherwise recreate the (external) table entries
-    * over the existing files — the bucket spec in the CREATE must match
-    * the writer's for Spark to trust the file-name bucket ids, which
-    * `bucketed.json` guarantees. */
-  def loadBucketed(spark: SparkSession, path: String): DictStore = {
-    val buckets = """"buckets"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readTextFile(spark, s"$path/bucketed.json"))
-      .map(_.group(1).toInt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$path/bucketed.json: no bucket count — not a bucketed store"))
-    val base = tableBase(path)
-    val termSql = graft.rdf.TermSchema.termType.sql
-    if (!spark.catalog.tableExists(s"${base}_dict"))
-      spark.sql(
-        s"""CREATE TABLE ${base}_dict (id BIGINT, term $termSql)
-           |USING PARQUET
-           |CLUSTERED BY (id) SORTED BY (id) INTO $buckets BUCKETS
-           |LOCATION '$path/dict'""".stripMargin)
-    if (!spark.catalog.tableExists(s"${base}_quads"))
-      spark.sql(
-        s"""CREATE TABLE ${base}_quads (s BIGINT, p BIGINT, o BIGINT, g BIGINT)
-           |USING PARQUET
-           |CLUSTERED BY (s) SORTED BY (p, s) INTO $buckets BUCKETS
-           |LOCATION '$path/quads'""".stripMargin)
-    new DictStore(spark,
-      spark.table(s"${base}_dict"),
-      spark.table(s"${base}_quads"),
-      try Some(graft.sparql.QuadsStats.read(spark, s"$path/stats"))
-      catch { case _: org.apache.spark.sql.AnalysisException => None },
-      // lex-clustered lookup sidecar (absent on stores written before
-      // it existed — the bucketed table answers lookups unpruned then)
-      try Some(spark.read.parquet(s"$path/dict_by_lex"))
-      catch { case _: org.apache.spark.sql.AnalysisException => None })
-  }
-
-  // marker I/O goes through the Hadoop FileSystem of the store path —
-  // a bucketed store can live on any filesystem Spark writes to
-  // (hdfs://, s3a://, file:…), not just the driver's local disk
+  // store I/O goes through the Hadoop FileSystem of the store path — a
+  // store can live on any filesystem Spark writes to (hdfs://, s3a://,
+  // file:…), not just the driver's local disk
   private def hadoopFs(spark: SparkSession, p: String) = {
-    val hp = new org.apache.hadoop.fs.Path(p)
+    val hp = new HPath(p)
     (hp.getFileSystem(spark.sparkContext.hadoopConfiguration), hp)
   }
 
-  /** Layout-dispatch guard for [[append]]/[[compact]]: MUST resolve
-    * through the store path's own filesystem — a `java.io.File`
-    * check is silently false for hdfs://.../s3a://... stores, which
-    * would let a plain append write non-bucketed files into a
-    * bucketed store's catalog-owned directories (bucket ids are
-    * derived from file names, so that corrupts the bucket contract
-    * without any error). */
-  private def bucketedMarkerExists(spark: SparkSession,
-                                   path: String): Boolean = {
-    val (fs, hp) = hadoopFs(spark, s"$path/bucketed.json")
-    fs.exists(hp)
+  /** The layout dispatch of [[load]], [[append]] and [[compact]]: the
+    * bucket count recorded in `path/bucketed.json`, `None` for a plain
+    * store. It MUST resolve through the store path's own filesystem:
+    * a `java.io.File` check is silently false for hdfs://, s3a:// or
+    * an explicit `file:` scheme, and a bucketed store treated as plain
+    * would get non-bucketed files in its catalog-owned directories
+    * (bucket ids are derived from file names, so that corrupts the
+    * bucket contract without any error). */
+  private def bucketCount(spark: SparkSession, path: String): Option[Int] = {
+    val (fs, marker) = hadoopFs(spark, s"$path/bucketed.json")
+    if (!fs.exists(marker)) None
+    else {
+      val in = fs.open(marker)
+      val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      Some(""""buckets"\s*:\s*(\d+)""".r.findFirstMatchIn(text)
+        .map(_.group(1).toInt).getOrElse(throw new IllegalArgumentException(
+          s"$marker: no bucket count — not a bucketed store")))
+    }
   }
 
-  /** Stats sidecar of an existing store, `None` when it predates the
-    * sidecar — the same tolerance [[load]]/[[loadBucketed]] apply.
-    * MISSING is the only tolerated state (checked via the store
-    * path's filesystem, like [[bucketedMarkerExists]]): a sidecar
-    * that exists but cannot be read (corrupt files, permissions)
-    * propagates, because swallowing it would make append silently
-    * stop updating stats — indistinguishable from a legacy store,
-    * leaving permanently undercounted CBO estimates. */
-  private def readStats(spark: SparkSession,
-                        path: String): Option[graft.sparql.QuadsStats] = {
-    val statsPath = s"$path/stats"
-    val (fs, hp) = hadoopFs(spark, statsPath)
-    if (!fs.exists(hp)) None
-    else Some(graft.sparql.QuadsStats.read(spark, statsPath))
+  /** The one stats opener ([[load]], [[append]]): the stats sidecar of
+    * an existing store, `None` when it predates the sidecar. MISSING
+    * is the only tolerated state (checked via the store path's
+    * filesystem): a sidecar that exists but cannot be read (corrupt
+    * files, permissions) propagates, because swallowing it would make
+    * append silently stop updating stats — indistinguishable from a
+    * legacy store, leaving permanently undercounted CBO estimates. */
+  private def readStats(spark: SparkSession, path: String): Option[QuadsStats] = {
+    val (fs, hp) = hadoopFs(spark, s"$path/stats")
+    if (!fs.exists(hp)) None else Some(QuadsStats.read(spark, hp.toString))
   }
-
-  private def writeTextFile(spark: SparkSession, p: String,
-                            text: String): Unit = {
-    val (fs, hp) = hadoopFs(spark, p)
-    val out = fs.create(hp, true)
-    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def readTextFile(spark: SparkSession, p: String): String = {
-    val (fs, hp) = hadoopFs(spark, p)
-    val in = fs.open(hp)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
-  }
-
 }

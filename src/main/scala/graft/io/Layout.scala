@@ -93,6 +93,14 @@ object Layout {
     spark.read.parquet(path).filter(predicate)
       .select(input_file_name()).distinct().count()
 
+  /** Output file count for `bytes` of data at `targetFileBytes` a
+    * file: the ceiling of the quotient, clamped to [1, `maxFiles`].
+    * The one file-sizing rule of every store writer — [[compact]] and
+    * the dict store's plain-layout writes. */
+  private[io] def fileCount(bytes: BigInt, targetFileBytes: Long,
+                            maxFiles: Int = Int.MaxValue): Int =
+    ((bytes + targetFileBytes - 1) / targetFileBytes).max(1).min(maxFiles).toInt
+
   /** Bin-pack a parquet directory into ~`targetFileBytes` files — the
     * small-file compaction every long-lived table needs (streaming
     * sinks and incremental appends leave thousands of KB-sized files;
@@ -145,8 +153,7 @@ object Layout {
       // skip bookkeeping: _SUCCESS markers and hidden .crc checksums
       if (!n.startsWith("_") && !n.startsWith(".")) totalBytes += f.getLen
     }
-    val n = math.max(1L,
-      math.ceil(totalBytes.toDouble / targetFileBytes).toLong).toInt
+    val n = fileCount(totalBytes, targetFileBytes)
     val df = spark.read.parquet(inPath)
     val out =
       if (sortCols.nonEmpty)

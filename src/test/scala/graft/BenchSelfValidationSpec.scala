@@ -82,4 +82,22 @@ class BenchSelfValidationSpec extends AnyFlatSpec with Matchers {
     java.nio.file.Files.writeString(p, "{not json")
     Bench.baselineMedians(p, "/root/testdata/sf0.1") shouldBe empty
   }
+
+  "stdoutLine" should "fit 300 bytes and parse as JSON for the 179-entry battery" in {
+    // the driver cuts a longer line from its log tail (the per-entry
+    // medians map made it ~4.4 KB); the values are wide on purpose:
+    // four-digit totals, five-digit CPU seconds
+    val medians = (1 to 179).map(i => f"q_entry_$i%03d" -> (0.5 + i * 0.37))
+    val total = medians.map(_._2).sum
+    val line = Bench.stdoutLine(total, total * 0.9, "[]", 12,
+      Bench.noiseJson(0.412, 0.398, 4321.987, 98765.432),
+      "/root/testdata/sf10x")
+    line.getBytes(java.nio.charset.StandardCharsets.UTF_8).length should be <= 300
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    json.get("metric").asText() shouldBe "total"
+    json.get("value").asDouble() shouldBe total +- 0.001
+    json.get("remeasured_n").asInt() shouldBe 12
+    json.get("failed").isArray shouldBe true
+    json.has("queries") shouldBe false
+  }
 }

@@ -48,14 +48,18 @@ class DictAppendSpec extends AnyFlatSpec with Matchers {
         else graft.rdf.TermSchema.fromRow(r.getStruct(i)))
     }.groupBy(identity).view.mapValues(_.size).toMap
 
-  private lazy val (appended, fresh) = {
-    val dir = java.nio.file.Files.createTempDirectory("dict-append").toString
-    DictStore.encode(df(batch1), dir)
-    val appendedStore = DictStore.append(df(batch2), dir)
-    val dir2 = java.nio.file.Files.createTempDirectory("dict-union").toString
-    val freshStore = DictStore.encode(df(batch1 ++ batch2), dir2)
-    (appendedStore, freshStore)
-  }
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The one caller-side layout choice; every later operation runs
+    * through the same `append`, `compact` and `load`. */
+  private val layouts: Seq[(String, (DataFrame, String) => DictStore)] = Seq(
+    "plain" -> ((d, dir) => DictStore.encode(d, dir)),
+    "bucketed" -> ((d, dir) => DictStore.encodeBucketed(d, dir, buckets = 4)))
+
+  /** From-scratch encode of the union: the reference every appended
+    * store of either layout must answer like. */
+  private lazy val fresh = DictStore.encode(df(batch1 ++ batch2), tmp("dict-union"))
 
   behavior of "DictStore.append"
 
@@ -72,9 +76,22 @@ class DictAppendSpec extends AnyFlatSpec with Matchers {
       // temporal sidecar from the appended batch only
       """SELECT ?s { ?s :seen ?t FILTER(?t >= "2024-01-01T00:00:00"^^<http://www.w3.org/2001/XMLSchema#dateTime>) }""",
       "SELECT ?s ?n { ?s :bal ?b OPTIONAL { ?s :name ?n } }")
-    for (qy <- queries) withClue(s"$qy\n") {
-      bindings(appended.sparql(pfx + qy)) shouldBe
-        bindings(fresh.sparql(pfx + qy))
+    // one row per layout: encode -> append -> compact -> load, all but
+    // the encode through the same layout-dispatching API
+    for ((layout, encode) <- layouts) {
+      val dir = tmp(s"dict-append-$layout")
+      encode(df(batch1), dir)
+      val appended = DictStore.append(df(batch2), dir)
+      for (qy <- queries) withClue(s"$layout append: $qy\n") {
+        bindings(appended.sparql(pfx + qy)) shouldBe
+          bindings(fresh.sparql(pfx + qy))
+      }
+      DictStore.compact(spark, dir)
+      val compacted = DictStore.load(spark, dir)
+      for (qy <- queries) withClue(s"$layout compact: $qy\n") {
+        bindings(compacted.sparql(pfx + qy)) shouldBe
+          bindings(fresh.sparql(pfx + qy))
+      }
     }
   }
 
@@ -170,7 +187,7 @@ class DictAppendSpec extends AnyFlatSpec with Matchers {
   it should "append to a BUCKETED store with the same union contract" in {
     val dir = java.nio.file.Files.createTempDirectory("dict-append-bk").toString
     DictStore.encodeBucketed(df(batch1), dir, buckets = 4)
-    val st = DictStore.appendBucketed(df(batch2), dir)
+    val st = DictStore.append(df(batch2), dir)
     val dir2 = java.nio.file.Files.createTempDirectory("dict-union-bk").toString
     val all = DictStore.encodeBucketed(df(batch1 ++ batch2), dir2, buckets = 4)
     val queries = Seq(
@@ -188,14 +205,14 @@ class DictAppendSpec extends AnyFlatSpec with Matchers {
     bkt.map(_.getLong(0)).sorted.toSeq shouldBe
       lex.map(_.getLong(0)).sorted.toSeq
     // a reloaded store (fresh catalog attach) sees the appended data
-    bindings(DictStore.loadBucketed(spark, dir).sparql(pfx + queries.head))
+    bindings(DictStore.load(spark, dir).sparql(pfx + queries.head))
       .values.sum shouldBe bindings(all.sparql(pfx + queries.head)).values.sum
   }
 
   it should "compact a bucketed store back to one sorted file per bucket" in {
     val dir = java.nio.file.Files.createTempDirectory("dict-cmp-bkt").toString
     DictStore.encodeBucketed(df(batch1), dir, buckets = 3)
-    DictStore.appendBucketed(df(batch2), dir)
+    DictStore.append(df(batch2), dir)
     def bucketFiles(sub: String): Map[String, Int] =
       new java.io.File(s"$dir/$sub").listFiles()
         .filter(_.getName.endsWith(".parquet"))
@@ -205,12 +222,12 @@ class DictAppendSpec extends AnyFlatSpec with Matchers {
         .view.mapValues(_.length).toMap
     bucketFiles("quads").values.max should be > 1 // append left extras
     val qy = pfx + "SELECT ?s ?n ?b { ?s :name ?n . ?s :bal ?b }"
-    val before = bindings(DictStore.loadBucketed(spark, dir).sparql(qy))
-    DictStore.compactBucketed(spark, dir)
+    val before = bindings(DictStore.load(spark, dir).sparql(qy))
+    DictStore.compact(spark, dir)
     bucketFiles("quads").values.max shouldBe 1
     new java.io.File(s"$dir/quads_old").exists() shouldBe false
     new java.io.File(s"$dir/quads_compacting").exists() shouldBe false
-    val st = DictStore.loadBucketed(spark, dir)
+    val st = DictStore.load(spark, dir)
     bindings(st.sparql(qy)) shouldBe before
     // dict bijection intact, lex copy in sync
     val bkt = st.dict.collect()
@@ -218,7 +235,14 @@ class DictAppendSpec extends AnyFlatSpec with Matchers {
     spark.read.parquet(s"$dir/dict_by_lex").count() shouldBe bkt.length
   }
 
-  it should "reject pre-v5 and bucketed stores loudly" in {
+  /** Bucket id of every data file under `dir/sub`; `None` marks a
+    * file without one, i.e. a plain-layout write. */
+  private def bucketIds(dir: String, sub: String): Seq[Option[Int]] =
+    new java.io.File(s"$dir/$sub").listFiles().toSeq
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => "_(\\d{5})\\.".r.findFirstMatchIn(f.getName).map(_.group(1).toInt))
+
+  it should "reject pre-v5 stores loudly and keep bucketed stores bucket-numbered" in {
     import org.apache.spark.sql.functions.{col, when}
     // simulate a v4 layout: o_num renamed back to exact-only o_dec
     val dir = java.nio.file.Files.createTempDirectory("dict-append-v4").toString
@@ -231,10 +255,57 @@ class DictAppendSpec extends AnyFlatSpec with Matchers {
     spark.read.parquet(s"$dir/dict").write.parquet(s"$v4dir/dict")
     an[IllegalArgumentException] should be thrownBy
       DictStore.append(df(batch2), v4dir)
-    // bucketed layout: catalog-owned files
-    val bdir = java.nio.file.Files.createTempDirectory("dict-append-bkt").toString
+    // bucketed layout: append and compact dispatch to the bucketed
+    // writers, so its catalog-owned directories only ever hold
+    // bucket-numbered files (bucket ids come from file names)
+    val bdir = tmp("dict-append-bkt")
     DictStore.encodeBucketed(df(batch1), bdir, buckets = 2)
-    an[IllegalArgumentException] should be thrownBy
-      DictStore.append(df(batch2), bdir)
+    DictStore.append(df(batch2), bdir)
+    for (sub <- Seq("quads", "dict")) withClue(s"append $sub: ") {
+      val ids = bucketIds(bdir, sub)
+      ids should not be empty
+      all(ids) shouldBe defined
+      all(ids.flatten) should be < 2
+    }
+    DictStore.compact(spark, bdir)
+    for (sub <- Seq("quads", "dict")) withClue(s"compact $sub: ") {
+      val ids = bucketIds(bdir, sub)
+      all(ids) shouldBe defined
+      ids.flatten.distinct should have size ids.size.toLong // one file per bucket
+    }
+    val qy = pfx + "SELECT ?s ?n ?b { ?s :bal ?b OPTIONAL { ?s :name ?n } }"
+    bindings(DictStore.load(spark, bdir).sparql(qy)) shouldBe
+      bindings(fresh.sparql(qy))
+  }
+
+  it should "restore the pre-compaction copy when compact re-runs after a crash between its renames" in {
+    val qy = pfx + "SELECT ?s ?n ?b { ?s :bal ?b OPTIONAL { ?s :name ?n } }"
+    for ((layout, encode) <- layouts) withClue(s"$layout: ") {
+      val dir = tmp(s"dict-crash-$layout")
+      encode(df(batch1), dir)
+      DictStore.append(df(batch2), dir)
+      val before = bindings(DictStore.load(spark, dir).sparql(qy))
+      val subs = Seq("quads", "dict") ++
+        (if (layout == "bucketed") Seq("dict_by_lex") else Nil)
+      // the state a crash between the swap's two renames leaves: the
+      // live directory renamed to <sub>_old, a rewrite in
+      // <sub>_compacting (torn here, so promoting it would fail loudly)
+      for (sub <- subs) {
+        new java.io.File(s"$dir/$sub")
+          .renameTo(new java.io.File(s"$dir/${sub}_old")) shouldBe true
+        val torn = new java.io.File(s"$dir/${sub}_compacting")
+        torn.mkdirs() shouldBe true
+        java.nio.file.Files.write(
+          new java.io.File(torn, "part-00000-torn.parquet").toPath,
+          Array[Byte](1, 2, 3))
+      }
+      DictStore.compact(spark, dir)
+      for (sub <- subs) {
+        new java.io.File(s"$dir/$sub").isDirectory shouldBe true
+        new java.io.File(s"$dir/${sub}_old").exists() shouldBe false
+        new java.io.File(s"$dir/${sub}_compacting").exists() shouldBe false
+      }
+      bindings(DictStore.load(spark, dir).sparql(qy)) shouldBe before
+    }
   }
 }

@@ -125,14 +125,14 @@ class DictBucketedSpec extends SparqlSpecBase {
     val fx = TestSpark.fixture("group_by.ttl")
     DictStore.encodeBucketed(fx, dir, buckets = 4)
     // simulate a fresh session: drop the catalog entries (external
-    // tables — the files survive), then loadBucketed must recreate
+    // tables — the files survive), then load must recreate
     // them with the persisted bucket spec
     spark.catalog.listTables().collect()
       .filter(_.name.startsWith("graft_bkt_"))
       .filter(t => spark.table(t.name).inputFiles.headOption.exists(_.contains(
         dir.replaceAll("[^A-Za-z0-9_/.-]", "_"))))
       .foreach(t => spark.sql(s"DROP TABLE ${t.name}"))
-    val re = DictStore.loadBucketed(spark, dir)
+    val re = DictStore.load(spark, dir)
     val q =
       """PREFIX : <http://books.example/>
         |SELECT ?org ?lprice
@@ -177,6 +177,6 @@ class DictBucketedSpec extends SparqlSpecBase {
 
   it should "refuse to load a non-bucketed path" in {
     val dir = java.nio.file.Files.createTempDirectory("graft-bkt-miss").toString
-    an[Exception] should be thrownBy DictStore.loadBucketed(spark, dir)
+    an[Exception] should be thrownBy DictStore.load(spark, dir)
   }
 }

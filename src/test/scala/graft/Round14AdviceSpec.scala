@@ -6,12 +6,12 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
-/** Regressions for the round-13 review items: the bucketed-store
-  * guard in DictStore.append/compact must resolve through the STORE
-  * PATH's filesystem (a `java.io.File` check is silently false for
-  * any non-local scheme — hdfs://, s3a://, even an explicit
-  * `file:` —, letting a plain append corrupt a bucketed store's
-  * bucket contract), and appending to a legacy store written before
+/** Regressions for the round-13 review items: the layout dispatch in
+  * DictStore.append/compact must resolve through the STORE PATH's
+  * filesystem (a `java.io.File` check is silently false for any
+  * non-local scheme — hdfs://, s3a://, even an explicit `file:` —,
+  * letting a plain append corrupt a bucketed store's bucket
+  * contract), and appending to a legacy store written before
   * the stats sidecar existed must tolerate the missing sidecar the
   * way load() does instead of throwing. */
 class Round14AdviceSpec extends AnyFlatSpec with Matchers {
@@ -33,39 +33,50 @@ class Round14AdviceSpec extends AnyFlatSpec with Matchers {
     q("c", "bal", lit_("75.25", XSD.double)),
     q("c", "name", lit_("carol", XSD.string)))
 
-  behavior of "DictStore.append/compact bucketed-store guard"
+  /** Bucket id of every data file under `dir/sub`; `None` marks a
+    * file without one, i.e. a plain-layout write. */
+  private def bucketIds(dir: String, sub: String): Seq[Option[Int]] =
+    new java.io.File(s"$dir/$sub").listFiles().toSeq
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => "_(\\d{5})\\.".r.findFirstMatchIn(f.getName).map(_.group(1).toInt))
 
-  // The scheme-qualified path is the dispatch proof: the pre-fix
-  // java.io.File(s"file:/…/bucketed.json").exists() is ALWAYS false
-  // ("file:" parses as a relative path segment), so the guard passed
-  // and append() wrote plain-layout files into the bucketed quads/
-  // dict directories. The Hadoop-FS guard resolves the scheme like
-  // every other marker read in the file.
-  it should "trip on a bucketed store addressed with an explicit scheme" in {
-    val dir = java.nio.file.Files.createTempDirectory("r14-guard-bkt").toString
+  /** Append and compact a 2-bucket store through `addressed(dir)`: the
+    * bucketed directories must only ever hold bucket-numbered files
+    * (one per bucket after compact), and load answers the union. */
+  private def keepsBucketContract(addressed: String => String): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("r14-bkt").toString
     DictStore.encodeBucketed(df(batch1), dir, buckets = 2)
-    val schemed = s"file:$dir"
-    val quadFiles = new java.io.File(s"$dir/quads").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    val ex1 = the[IllegalArgumentException] thrownBy
-      DictStore.append(df(batch2), schemed)
-    ex1.getMessage should include("bucketed")
-    val ex2 = the[IllegalArgumentException] thrownBy
-      DictStore.compact(spark, schemed)
-    ex2.getMessage should include("bucketed")
-    // the store's files are untouched — nothing was appended/rewritten
-    new java.io.File(s"$dir/quads").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet shouldBe
-      quadFiles
+    DictStore.append(df(batch2), addressed(dir))
+    for (sub <- Seq("quads", "dict")) withClue(s"append $sub: ") {
+      all(bucketIds(dir, sub)) shouldBe defined
+    }
+    DictStore.compact(spark, addressed(dir))
+    for (sub <- Seq("quads", "dict")) withClue(s"compact $sub: ") {
+      val ids = bucketIds(dir, sub)
+      all(ids) shouldBe defined
+      ids.flatten.distinct should have size ids.size.toLong // one per bucket
+    }
+    val union = DictStore.encode(df(batch1 ++ batch2),
+      java.nio.file.Files.createTempDirectory("r14-bkt-u").toString)
+    val qy = "PREFIX : <urn:p:>\nSELECT ?s ?b { ?s :bal ?b }"
+    def rows(st: DictStore) = st.sparql(qy).collect().map(_.toString).sorted.toSeq
+    rows(DictStore.load(spark, addressed(dir))) shouldBe rows(union)
   }
 
-  it should "still trip on a plain (scheme-less) local path" in {
-    val dir = java.nio.file.Files.createTempDirectory("r14-guard-loc").toString
-    DictStore.encodeBucketed(df(batch1), dir, buckets = 2)
-    an[IllegalArgumentException] should be thrownBy
-      DictStore.append(df(batch2), dir)
-    an[IllegalArgumentException] should be thrownBy
-      DictStore.compact(spark, dir)
+  behavior of "DictStore.append/compact on a bucketed store"
+
+  // The scheme-qualified path is the dispatch proof: a
+  // java.io.File(s"file:/…/bucketed.json").exists() check is ALWAYS
+  // false ("file:" parses as a relative path segment), which once let
+  // append() write plain-layout files into the bucketed quads/dict
+  // directories. The layout dispatch reads the marker through the
+  // path's Hadoop filesystem like every other store read.
+  it should "keep the bucket contract when addressed with an explicit scheme" in {
+    keepsBucketContract(dir => s"file:$dir")
+  }
+
+  it should "keep the bucket contract when addressed by a plain local path" in {
+    keepsBucketContract(identity)
   }
 
   behavior of "DictStore.append on a legacy (pre-sidecar) store"
