@@ -74,15 +74,7 @@ object AnnRecall {
     val numQueries = args.lift(2).map(_.toInt).getOrElse(20)
     val planted = 10
     val k = 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start(32)
     import graft.pipeline.{Ivf, Similarity}
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -142,18 +142,28 @@ object Bench {
     } catch { case _: Exception => Map.empty }
   }
 
+  private[graft] def medianOf(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
+  /** Fixed calibration probe, median of 3 seconds: engine-independent
+    * arithmetic over an in-memory range — no IO, no shuffle,
+    * byte-identical work every round, so its wall time moves ONLY with
+    * host contention. */
+  private[graft] def calibrate(spark: SparkSession): Double =
+    medianOf((1 to 3).map { _ =>
+      val t0 = System.nanoTime()
+      spark.range(0, 50000000L, 1, spark.sparkContext.defaultParallelism)
+        .selectExpr("sum(id * 2 + 1)").collect()
+      (System.nanoTime() - t0) / 1e9
+    })
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start(32)
 
     // Materialize EVERY output column (count() would let Catalyst prune
     // the computed columns away and under-measure).
@@ -164,21 +174,6 @@ object Bench {
     val osBean = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def medianOf(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    // fixed calibration probe: engine-independent arithmetic over an
-    // in-memory range — no IO, no shuffle, byte-identical work every
-    // round, so its wall time moves ONLY with host contention
-    def calibrate(): Double = medianOf((1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(0, 50000000L, 1, cpus.toInt)
-        .selectExpr("sum(id * 2 + 1)").collect()
-      (System.nanoTime() - t0) / 1e9
-    })
-
     // untimed warm-up: EVERY entry once (round-19, verdict item #2) —
     // build-once /tmp artifacts (dict stores, WARC fixtures, persisted
     // ANN/IVF indexes, signed corpora), Janino codegen and parquet
@@ -190,7 +185,7 @@ object Bench {
       try exec(q) catch { case _: Throwable => () }
     }
 
-    val calibBefore = calibrate()
+    val calibBefore = calibrate(spark)
     val wall0 = System.nanoTime()
     val cpu0 = osBean.getProcessCpuTime
 
@@ -288,7 +283,7 @@ object Bench {
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val wallSec = (System.nanoTime() - wall0) / 1e9
     val cpuSec = (osBean.getProcessCpuTime - cpu0) / 1e9
-    val calibAfter = calibrate()
+    val calibAfter = calibrate(spark)
     // per-entry PlanLint ERROR counts + shuffle-exchange counts next
     // to the latencies: a plan regression (new cartesian, oversized
     // broadcast, a quietly-added extra shuffle) becomes

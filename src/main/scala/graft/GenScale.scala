@@ -38,15 +38,7 @@ object GenScale {
     val out = args(1)
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     require(factor >= 1, s"factor=$factor must be >= 1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start(16)
     run(spark, src, out, factor)
     spark.stop()
   }

@@ -6,16 +6,17 @@ import java.nio.file.{Files, Paths}
   * entry's stale output from a previous run is DELETED before the
   * attempt (a leftover parquet would masquerade as this run's result
   * and turn a regression into a false PASS), and any failure exits
-  * nonzero like Bench. */
+  * nonzero like Bench. Entry names after the two directories restrict
+  * the dump, and its oracle_sql.json, to that subset. */
 object Verify {
-  /** Dump `SparkEntry.oracleSql` as `outDir/oracle_sql.json` — shared
-    * with the [[VerifyOne]] dev main so the two cannot diverge.
+  /** Dump `SparkEntry.oracleSql` (restricted to `only` when given) as
+    * `outDir/oracle_sql.json`.
     * JSON string escape covers backslash, quote, and ALL control chars
     * (<0x20) — a tab or CR in builder-authored SQL would otherwise make
     * the driver's json.load fail and silently zero the round's
     * correctness. */
-  private[graft] def writeOracleJson(outDir: String,
-                                     only: Option[Set[String]] = None): Unit = {
+  private def writeOracleJson(outDir: String,
+                              only: Option[Set[String]]): Unit = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -31,18 +32,29 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }
 
+  private val usage = "usage: graft.Verify <sfDir> <outDir> [entry...]"
+
+  /** `<sfDir> <outDir> [entry...]` as (sfDir, outDir, entry subset —
+    * None for the whole battery), or the usage message; pure, so a bad
+    * command line fails before any session starts. */
+  private[graft] def parseArgs(
+      args: Seq[String]): Either[String, (String, String, Option[Set[String]])] =
+    args match {
+      case Seq(sfDir, outDir, names @ _*) =>
+        val unknown = names.filterNot(SparkEntry.queries.contains)
+        if (unknown.nonEmpty)
+          Left(s"unknown battery entries: ${unknown.mkString(", ")}\n$usage")
+        else Right((sfDir, outDir, Option.when(names.nonEmpty)(names.toSet)))
+      case _ => Left(usage)
+    }
+
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val failed = run(spark, sfDir, outDir)
+    val (sfDir, outDir, only) = parseArgs(args.toSeq) match {
+      case Right(parsed) => parsed
+      case Left(msg) => System.err.println(msg); sys.exit(2)
+    }
+    val spark = LocalSession.start(4)
+    val failed = run(spark, sfDir, outDir, only)
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[verify] FAILED entries: ${failed.sorted.mkString(", ")}")

@@ -2046,18 +2046,17 @@ object DictStore {
 
   // ----- bucketed layout -----
 
-  /** Bucketed layout per table: bucket column, sort columns, and the
-    * columns a re-attach declares. */
+  /** Bucketed layout per table: bucket column and sort columns. */
   private val bucketSpec = Map(
-    "dict" -> ("id", Seq("id"), s"id BIGINT, term ${TermSchema.termType.sql}"),
-    "quads" -> ("s", Seq("p", "s"), "s BIGINT, p BIGINT, o BIGINT, g BIGINT"))
+    "dict" -> ("id", Seq("id")),
+    "quads" -> ("s", Seq("p", "s")))
 
   /** Write `df` as bucketed table `name` with data at `dir`, under the
     * [[bucketSpec]] of `sub`. The repartition's hash IS the bucket-id
     * hash, so each bucket lands as one file per write. */
   private def bucketedWrite(df: DataFrame, buckets: Int, sub: String,
                             dir: String, name: String, mode: SaveMode): Unit = {
-    val (by, sort, _) = bucketSpec(sub)
+    val (by, sort) = bucketSpec(sub)
     zstd(df.repartition(buckets, col(by)), mode).option("path", dir)
       .bucketBy(buckets, by).sortBy(sort.head, sort.tail: _*)
       .saveAsTable(name)
@@ -2080,18 +2079,22 @@ object DictStore {
     * (external) entry over the existing files when this session lacks
     * it — the bucket spec in the CREATE must match the writer's for
     * Spark to trust the file-name bucket ids, which `bucketed.json`
-    * guarantees. In production this catalog is the metastore. */
+    * guarantees, and the columns are the ones the files carry (the
+    * typed sidecar included). In production this catalog is the
+    * metastore. */
   private def table(spark: SparkSession, path: String, sub: String,
                     buckets: Option[Int]): DataFrame = buckets match {
     case None => spark.read.parquet(s"$path/$sub")
     case Some(n) =>
       val name = s"${tableBase(spark, path)}_$sub"
-      val (by, sort, cols) = bucketSpec(sub)
-      if (!spark.catalog.tableExists(name))
+      val (by, sort) = bucketSpec(sub)
+      if (!spark.catalog.tableExists(name)) {
+        val cols = spark.read.parquet(s"$path/$sub").schema.toDDL
         spark.sql(
           s"""CREATE TABLE $name ($cols) USING PARQUET
              |CLUSTERED BY ($by) SORTED BY (${sort.mkString(", ")}) INTO $n BUCKETS
              |LOCATION '$path/$sub'""".stripMargin)
+      }
       spark.table(name)
   }
 

@@ -120,9 +120,10 @@ object Layout {
     * shuffle to (re-)establish clustering while compacting — the
     * combined "compact + cluster" maintenance pass.
     *
-    * Writes to `outPath`, never in place: swap the directory
-    * atomically after validation, the same snapshot discipline as
-    * SPARQL Update write-back. Returns the output file count. */
+    * Writes a new directory at `outPath`, never in place, and leaves
+    * the swap to the caller: nothing here replaces `inPath` or makes a
+    * replacement atomic for concurrent readers. Returns the output
+    * file count. */
   def compact(spark: SparkSession, inPath: String, outPath: String,
               targetFileBytes: Long, sortCols: Seq[String] = Nil): Int = {
     require(targetFileBytes > 0,

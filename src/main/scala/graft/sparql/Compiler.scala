@@ -238,9 +238,9 @@ object Compiler {
 
   /** SPARQL 1.1 Update as a pure quad-table transform: returns the
     * updated quads DataFrame (the store is immutable parquet — the
-    * caller writes the result as the new table version, which at scale
-    * is the safe pattern anyway: updates become atomic snapshot
-    * swaps). Semantics per §3.1.3: the WHERE solutions instantiate the
+    * caller commits the result by writing it as the new table version;
+    * nothing here makes that write atomic for concurrent readers).
+    * Semantics per §3.1.3: the WHERE solutions instantiate the
     * DELETE template, then the INSERT template, and deletion is
     * applied before insertion; existing duplicate source quads are
     * preserved (documented source-duplicate contract), deletion

@@ -407,9 +407,9 @@ object Sparql {
       * DELETE DATA / DELETE WHERE / DELETE…INSERT…WHERE) and the §3.2
       * graph-management forms (LOAD / CLEAR / DROP / CREATE / ADD /
       * COPY / MOVE), with ';'-separated operation sequences — as a
-      * pure transform: returns the updated quads DataFrame; write it
-      * back (e.g. QuadsIO.writeParquet) to commit — an atomic
-      * snapshot swap at scale. */
+      * pure transform: returns the updated quads DataFrame; the caller
+      * commits it by writing it back (e.g. QuadsIO.writeParquet), which
+      * is not atomic for concurrent readers. */
     def sparqlUpdate(update: String): DataFrame =
       Compiler.runUpdates(quads, SparqlParser.parseUpdate(update))
 

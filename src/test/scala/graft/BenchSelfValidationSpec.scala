@@ -100,4 +100,15 @@ class BenchSelfValidationSpec extends AnyFlatSpec with Matchers {
     json.get("failed").isArray shouldBe true
     json.has("queries") shouldBe false
   }
+
+  behavior of "Bench strict gate"
+
+  it should "not fail a run that just regenerated the baseline" in {
+    // (strict, rebaselining, budgetClean) -> fails?
+    Bench.strictGateFails(true, false, false) shouldBe true // the CI case
+    Bench.strictGateFails(true, true, false) shouldBe false // re-baseline run
+    Bench.strictGateFails(true, true, true) shouldBe false
+    Bench.strictGateFails(true, false, true) shouldBe false
+    Bench.strictGateFails(false, false, false) shouldBe false // gate is opt-in
+  }
 }

@@ -147,6 +147,27 @@ class DictBucketedSpec extends SparqlSpecBase {
     }
   }
 
+  it should "keep the typed sidecar when compact re-attaches the tables before an append" in {
+    // compact drops the catalog entries and load re-creates them: the
+    // re-created quads table must declare every column its files carry
+    val dir = java.nio.file.Files.createTempDirectory("graft-bkt-cmp-append").toString
+    val fx = TestSpark.fixture("group_by.ttl")
+    val isPrice = org.apache.spark.sql.functions.col("p.lex").endsWith("price")
+    DictStore.encodeBucketed(fx.filter(!isPrice), s"$dir/b", buckets = 4)
+    DictStore.compact(spark, s"$dir/b")
+    DictStore.append(fx.filter(isPrice), s"$dir/b")
+    val st = DictStore.load(spark, s"$dir/b")
+    st.idQuads.columns should contain("o_num")
+    val union = DictStore.encode(fx, s"$dir/p")
+    val pfx = "PREFIX : <http://books.example/>\n"
+    for (q <- Seq(
+        "SELECT ?org ?lprice { ?org :affiliates ?auth . " +
+          "?auth :writesBook ?book . ?book :price ?lprice }",
+        "SELECT ?book ?p { ?book :price ?p FILTER(?p > 6) }",
+        "SELECT ?p { ?book :price ?p } ORDER BY DESC(?p) LIMIT 2"))
+      withClue(q) { assertResult(collect(st.sparql(pfx + q)), collect(union.sparql(pfx + q))) }
+  }
+
   it should "keep the lex-clustered phase-1 dict as the lookup sidecar" in {
     // encodeBucketed freezes (id, term) in a plain lex-clustered write
     // first (ids must not cross a shuffle before committing — see the

@@ -10,6 +10,7 @@ import org.scalatest.matchers.should.Matchers
   * two runs produce identical content. */
 class GenScaleSpec extends AnyFlatSpec with Matchers {
   private val spark = TestSpark.spark
+  import spark.implicits._
 
   private val src = "/root/testdata/sf0.001"
   private val factor = 3
@@ -93,5 +94,21 @@ class GenScaleSpec extends AnyFlatSpec with Matchers {
       read(out, t).exceptAll(read(out2, t)).count() shouldBe 0L
       read(out2, t).exceptAll(read(out, t)).count() shouldBe 0L
     }
+  }
+
+  behavior of "GenScale.strideOf"
+
+  it should "fail loudly on an empty source table" in {
+    val empty = Seq.empty[Long].toDF("k")
+    val e = intercept[IllegalArgumentException] {
+      GenScale.strideOf(empty, "k")
+    }
+    e.getMessage should include("empty source table")
+  }
+
+  it should "derive max+1 across integral widths via the long cast" in {
+    GenScale.strideOf(Seq(0L, 41L, 7L).toDF("k"), "k") shouldBe 42L
+    // IntegerType column: pre-fix this was a ClassCastException
+    GenScale.strideOf(Seq(3, 9).toDF("k"), "k") shouldBe 10L
   }
 }

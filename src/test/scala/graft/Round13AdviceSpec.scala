@@ -6,9 +6,9 @@ import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 /** Regressions for the round-12 advice items: regimeM Long-overflow
-  * termination, GenScale stride guards, the strict bench gate during a
-  * re-baseline run, and the corpus-side degenerate-signature filter in
-  * incremental media near-dup. */
+  * termination and the corpus-side degenerate-signature filter in
+  * incremental media near-dup. (The GenScale stride guards live in
+  * GenScaleSpec, the strict bench gate in BenchSelfValidationSpec.) */
 class Round13AdviceSpec extends AnyFlatSpec with Matchers {
   private val spark = TestSpark.spark
   import spark.implicits._
@@ -44,33 +44,6 @@ class Round13AdviceSpec extends AnyFlatSpec with Matchers {
       Sketches.regimeM(10, 4097, 2.0, 1 << 21) // non-power-of-two mMin
     an[IllegalArgumentException] should be thrownBy
       Sketches.regimeM(10, 4096, 0.5, 1 << 21) // headroom < 1
-  }
-
-  behavior of "GenScale.strideOf"
-
-  it should "fail loudly on an empty source table" in {
-    val empty = Seq.empty[Long].toDF("k")
-    val e = intercept[IllegalArgumentException] {
-      GenScale.strideOf(empty, "k")
-    }
-    e.getMessage should include("empty source table")
-  }
-
-  it should "derive max+1 across integral widths via the long cast" in {
-    GenScale.strideOf(Seq(0L, 41L, 7L).toDF("k"), "k") shouldBe 42L
-    // IntegerType column: pre-fix this was a ClassCastException
-    GenScale.strideOf(Seq(3, 9).toDF("k"), "k") shouldBe 10L
-  }
-
-  behavior of "Bench strict gate"
-
-  it should "not fail a run that just regenerated the baseline" in {
-    // (strict, rebaselining, budgetClean) -> fails?
-    Bench.strictGateFails(true, false, false) shouldBe true // the CI case
-    Bench.strictGateFails(true, true, false) shouldBe false // re-baseline run
-    Bench.strictGateFails(true, true, true) shouldBe false
-    Bench.strictGateFails(true, false, true) shouldBe false
-    Bench.strictGateFails(false, false, false) shouldBe false // gate is opt-in
   }
 
   behavior of "mediaNearDupAgainst"
