@@ -33,13 +33,26 @@ object Bench {
     * battery. The driver captures it from the sbt log tail, and a line
     * carrying the per-entry medians map (4.4 KB at 179 entries) was
     * cut mid-map, so every record from r16 on had "parsed": null.
-    * Per-entry medians, min-of-passes, CPU, lint, exchange counts and
-    * the budget diff live ONLY in bench_out.json, which log capture
-    * cannot truncate. */
+    * The failures appear as their count `failed_n` plus as many failed
+    * names as keep the line within [[stdoutMaxBytes]]; the full list,
+    * per-entry medians, min-of-passes, CPU, lint, exchange counts and
+    * the budget diff live in bench_out.json, which log capture cannot
+    * truncate. */
   private[graft] def stdoutLine(total: Double, totalMin: Double,
-                                failedJson: String, remeasuredN: Int,
-                                noise: String, sf: String): String =
-    f"""{"metric":"total","value":$total%.3f,"unit":"sec","total_min":$totalMin%.3f,"failed":$failedJson,"remeasured_n":$remeasuredN,$noise,"sf":"$sf"}"""
+                                failed: Seq[String], remeasuredN: Int,
+                                noise: String, sf: String): String = {
+    def line(names: Seq[String]) =
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","total_min":$totalMin%.3f,"failed_n":${failed.size},"failed":${jsonList(names)},"remeasured_n":$remeasuredN,$noise,"sf":"$sf"}"""
+    failed.inits.map(line)
+      .find(_.getBytes(java.nio.charset.StandardCharsets.UTF_8).length <= stdoutMaxBytes)
+      .getOrElse(line(Nil))
+  }
+
+  /** The longest stdout line a log-tail capture keeps whole. */
+  private[graft] val stdoutMaxBytes = 300
+
+  private def jsonList(names: Seq[String]): String =
+    names.map("\"" + _ + "\"").mkString("[", ",", "]")
 
   /** The validity evidence both output lines carry (see the object
     * doc), as JSON members. */
@@ -151,14 +164,19 @@ object Bench {
   /** Fixed calibration probe, median of 3 seconds: engine-independent
     * arithmetic over an in-memory range — no IO, no shuffle,
     * byte-identical work every round, so its wall time moves ONLY with
-    * host contention. */
-  private[graft] def calibrate(spark: SparkSession): Double =
-    medianOf((1 to 3).map { _ =>
+    * host contention. One discarded run first: the probe's own plan
+    * and generated code are compiled and JIT-warmed there, which read
+    * 0.46-0.50 s against 0.14-0.17 s warm in a short `Dev time` run. */
+  private[graft] def calibrate(spark: SparkSession): Double = {
+    def probe(): Double = {
       val t0 = System.nanoTime()
       spark.range(0, 50000000L, 1, spark.sparkContext.defaultParallelism)
         .selectExpr("sum(id * 2 + 1)").collect()
       (System.nanoTime() - t0) / 1e9
-    })
+    }
+    probe()
+    medianOf((1 to 3).map(_ => probe()))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -280,7 +298,7 @@ object Bench {
     val totalMin = results.collect {
       case (k, _, m, _) if !failed.contains(k) => m
     }.sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = jsonList(failed.toSeq)
     val wallSec = (System.nanoTime() - wall0) / 1e9
     val cpuSec = (osBean.getProcessCpuTime - cpu0) / 1e9
     val calibAfter = calibrate(spark)
@@ -330,7 +348,7 @@ object Bench {
         graft.plans.ExchangeBudget.render(actualMap))
     }
     val noise = noiseJson(calibBefore, calibAfter, wallSec, cpuSec)
-    val shortJson = stdoutLine(total, totalMin, failedJson, toRecheck.size,
+    val shortJson = stdoutLine(total, totalMin, failed.toSeq, toRecheck.size,
       noise, sfDir)
     val fullJson = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"queries_min":$qsMin,"queries_cpu":$qsCpu,"lint_errors":$lintCounts,"exchange_counts":$exchangeCounts,"exchange_over_budget":$overJson,"exchange_unbudgeted":$unbudgetedJson,"exchange_budget_stale":$staleJson,"remeasured":$remeasuredJson,"total_min":$totalMin%.3f,"failed":$failedJson,$noise,"sf":"$sfDir"}"""
     println(shortJson)

@@ -41,12 +41,28 @@ object Verify {
       args: Seq[String]): Either[String, (String, String, Option[Set[String]])] =
     args match {
       case Seq(sfDir, outDir, names @ _*) =>
-        val unknown = names.filterNot(SparkEntry.queries.contains)
-        if (unknown.nonEmpty)
-          Left(s"unknown battery entries: ${unknown.mkString(", ")}\n$usage")
-        else Right((sfDir, outDir, Option.when(names.nonEmpty)(names.toSet)))
+        subset(names, usage).map(only => (sfDir, outDir, only))
       case _ => Left(usage)
     }
+
+  private val sweepUsage =
+    "usage: graft.VerifyAtSf [sfDir [outDir [report.json [entry...]]]]"
+
+  /** [[VerifyAtSf]]'s entry subset (its arguments after `sfDir outDir
+    * report`), or the usage message; pure, like [[parseArgs]]. */
+  private[graft] def parseSweepArgs(
+      args: Seq[String]): Either[String, Option[Set[String]]] =
+    subset(args.drop(3), sweepUsage)
+
+  /** Battery entry names as a subset (None when empty), or an error
+    * naming the unknown ones. */
+  private def subset(names: Seq[String],
+                     usage: String): Either[String, Option[Set[String]]] = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty)
+      Left(s"unknown battery entries: ${unknown.mkString(", ")}\n$usage")
+    else Right(Option.when(names.nonEmpty)(names.toSet))
+  }
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = parseArgs(args.toSeq) match {

@@ -20,15 +20,19 @@ package graft
   * dump failure, row-check violation, or hash mismatch. */
 object VerifyAtSf {
   def main(args: Array[String]): Unit = {
+    // optional 4th+ args: restrict the sweep to a named entry subset
+    // (used by the self-generated 10× regime sweep, where only the
+    // scale-sensitive entries are re-checked); an unknown name exits 2
+    // before any session starts
+    val only = Verify.parseSweepArgs(args.toSeq) match {
+      case Right(parsed) => parsed
+      case Left(msg) => System.err.println(msg); sys.exit(2)
+    }
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-scale-sweep").toString)
     val report = args.lift(2).getOrElse("scale_check.json")
     val spark = LocalSession.start(32)
-    // optional 4th+ args: restrict the sweep to a named entry subset
-    // (used by the self-generated 10× regime sweep, where only the
-    // scale-sensitive entries are re-checked)
-    val only = if (args.length > 3) Some(args.drop(3).toSet) else None
     val failed = Verify.run(spark, sfDir, outDir, only)
     spark.stop()
     failed.sorted.foreach(n => System.err.println(s"[scale-sweep] dump FAILED: $n"))

@@ -49,33 +49,34 @@ import org.apache.spark.sql.types._
   * pruned BEFORE materialization; pruning a column never changes bag
   * cardinality, so this is safe under any ancestor including
   * DISTINCT). Id-safe ([[isExtBlock]] + dedicated cases): BGP blocks;
-  * OPTIONAL / MINUS spines and bag UNIONs (absent vars pad as NULL
-  * ids); joins above them when shared vars are assured both sides —
-  * including fully-defined VALUES probe lists, which join as local
-  * long relations (solution compatibility is term identity, which IS
-  * id equality);
-  * FILTER [NOT] EXISTS over BGP patterns (long semi/anti joins);
-  * EVERY SPARQL aggregate (keys decode post-agg; COUNT/SAMPLE over
-  * plain vars run on bare ids, MIN/MAX over plain vars compare
-  * dict-joined sort keys, and SUM/AVG/GROUP_CONCAT plus any aggregate
-  * over a computed expression hybrid-decode their inputs into the
-  * shared Compiler.aggAccumulator); ORDER BY + LIMIT top-k (sort on
-  * skeys — dict-joined or computed — and decode k rows);
-  * DISTINCT/REDUCED (dedup before decode); `+`/`*` closures
-  * (per-round frontier joins on longs); term-identity filters as
-  * long predicates; and ANY other scalar FILTER, OPTIONAL condition
-  * or BIND via the HYBRID decode — only the expression's variables
-  * join their terms back in and it evaluates through the standard
-  * ExprCompiler, so value semantics are shared code, not a
-  * re-implementation; zero-length paths in every endpoint shape
-  * (var-var enumerates scoped nodes in id space; constant ends bind
-  * from the literal — the term may be dict-absent — with named graphs
-  * enumerated in id space), and `*` with a constant end as
-  * Distinct(zero ∪ id-space `+` closure). The one remaining
-  * standard-compiler fallback: BOTH-constant `*`/`+` existence probes
-  * (a driver-bounded boolean over one closure; no variable to carry
-  * ids for). The fast path can never change semantics, only the plan
-  * under it.
+  * OPTIONAL / MINUS spines and bag UNIONs; joins whose shared vars are
+  * assured on both sides, including fully-defined VALUES probe lists
+  * (solution compatibility is term identity, which IS id equality);
+  * FILTER [NOT] EXISTS over BGP patterns; every SPARQL aggregate;
+  * ORDER BY + LIMIT top-k; DISTINCT/REDUCED; `+`/`*` closures;
+  * zero-length paths; and any EXISTS-free scalar FILTER, OPTIONAL
+  * condition or BIND. The one standard-compiler fallback: BOTH-constant
+  * `*`/`+` existence probes (no variable to carry ids for). The fast
+  * path can never change semantics, only the plan under it.
+  *
+  * What is id-specific lives here:
+  *  - the id scans ([[scanIds]]: constant positions as long equality);
+  *  - the constant lookup ([[constIdsOf]], one pruned dict scan);
+  *  - the decode: late materialization, the hybrid decode that lets
+  *    the standard ExprCompiler evaluate a condition on just the
+  *    referenced variables' terms, and the dict sort-key join — all
+  *    through one dict-join primitive ([[joinDictCols]]);
+  *  - the typed sidecar (join-free numeric/temporal FILTER and OPTIONAL
+  *    conditions against a constant);
+  *  - the threshold top-k (a sidecar cut before any dict contact);
+  * plus the rewrite itself, its eligibility predicates and the id-space
+  * operator bodies built from the pieces above. Every algebra analysis
+  * they use (`conjuncts`, `exprVars`, `assuredVars`,
+  * `normalizeNotExists`) is [[Algebra]]'s, and every representation-
+  * blind operator tail (UNION padding, the aggregation pass with its
+  * DISTINCT SUM/AVG side pass and accumulators, the zero-length node
+  * domain and constant rows, the ALP closure) is `object Compiler`'s,
+  * the same code the term-struct compiler runs.
   */
 final class DictStore private (val spark: SparkSession,
                                val dict: DataFrame,
@@ -185,10 +186,10 @@ final class DictStore private (val spark: SparkSession,
             totalRefs.getOrElse(v, 0) > scopeRefs.getOrElse(v, 0))
       }
     def go(op: Op): Op = op match {
-      case b if isBlock(b) || isExtBlock(b) =>
+      case b if isExtBlock(b) => // a FILTER with no conjuncts
         val keep = keepFor(b, Algebra.varsOrdered(b))
-        Materialized(compileExtBlock(b, keep), keep,
-          assuredIdVars(b) intersect keep.toSet)
+        Materialized(compileFilterIds(b, Nil, keep), keep,
+          assuredVars(b) intersect keep.toSet)
       case Join(l, r) => Join(go(l), go(r))
       case LeftJoin(l, r, c) => LeftJoin(go(l), go(r), c)
       case Union(l, r) => Union(go(l), go(r))
@@ -197,46 +198,29 @@ final class DictStore private (val spark: SparkSession,
         // group keys over assured vars stay assured; aggregate
         // outputs can be NULL (empty-group SAMPLE, poisoned SUM)
         Materialized(compileGroupCountIds(c, keys, aggs),
-          keys ++ aggs.map(_._1), keys.toSet intersect assuredIdVars(c))
+          keys ++ aggs.map(_._1), keys.toSet intersect assuredVars(c))
       // ORDER BY vars + LIMIT directly over a block: top-k in id
       // space — sort keys join in from the dictionary, the limit runs
-      // over (skey, id) rows, and only the surviving k rows decode
-      case sl @ Slice(Order(c, keys), off, lim)
-        if orderSliceEligible(c, keys, off, lim) =>
-        val keep = keepFor(sl, Algebra.varsOrdered(c))
-        Materialized(compileTopKIds(c, keys, off, lim.get, keep), keep,
-          assuredIdVars(c) intersect keep.toSet)
-      // plain SELECT stacks Slice(Project(Order(block))) — same top-k,
-      // the projection fixing exactly which vars decode
-      case Slice(Project(Order(c, keys), vs), off, lim)
-        if vs.forall(Algebra.vars(c).contains) &&
+      // over (skey, id) rows, and only the surviving k rows decode.
+      // Plain SELECT stacks Slice(Project(Order(block))): the
+      // projection then fixes exactly which vars decode.
+      case sl @ TopK(c, keys, off, lim, proj)
+        if proj.forall(_.forall(Algebra.vars(c).contains)) &&
           orderSliceEligible(c, keys, off, lim) =>
-        Materialized(compileTopKIds(c, keys, off, lim.get, vs), vs,
-          assuredIdVars(c) intersect vs.toSet)
+        val keep = proj.getOrElse(keepFor(sl, Algebra.varsOrdered(c)))
+        Materialized(compileTopKIds(c, keys, off, lim.get, keep), keep,
+          assuredVars(c) intersect keep.toSet)
       // DISTINCT/REDUCED directly over a (projected) block: dedup on
       // long tuples, decode only the SURVIVING rows (bijection ⇒ id
       // distinctness ≡ term distinctness, NULLs included)
-      case Distinct(Project(c, vs))
-        if idSource(c).isDefined && vs.forall(Algebra.vars(c).contains) =>
+      case IdDedup(c, vs) =>
         Materialized(compileDistinctIds(c, vs), vs,
-          assuredIdVars(c) intersect vs.toSet)
-      case Reduced(Project(c, vs))
-        if idSource(c).isDefined && vs.forall(Algebra.vars(c).contains) =>
-        Materialized(compileDistinctIds(c, vs), vs,
-          assuredIdVars(c) intersect vs.toSet)
-      case Distinct(c) if idSource(c).isDefined =>
-        val vs = Algebra.varsOrdered(c)
-        Materialized(compileDistinctIds(c, vs), vs,
-          assuredIdVars(c) intersect vs.toSet)
-      case Reduced(c) if idSource(c).isDefined =>
-        val vs = Algebra.varsOrdered(c)
-        Materialized(compileDistinctIds(c, vs), vs,
-          assuredIdVars(c) intersect vs.toSet)
+          assuredVars(c) intersect vs.toSet)
       case f @ Filter(c, e) => filterEligible(c, e) match {
         case Some(conjs) =>
           val keep = keepFor(f, Algebra.varsOrdered(c))
           Materialized(compileFilterIds(c, conjs, keep), keep,
-            assuredIdVars(c) intersect keep.toSet)
+            assuredVars(c) intersect keep.toSet)
         case None => Filter(go(c), e)
       }
       // BIND over a block: the expression's vars hybrid-decode, the
@@ -248,7 +232,7 @@ final class DictStore private (val spark: SparkSession,
         // the bound name is NOT assured (the expression may error)
         val keep = keepFor(ex, Algebra.varsOrdered(c) :+ n)
         Materialized(compileExtendIds(c, n, e, keep), keep,
-          assuredIdVars(c) intersect keep.toSet)
+          assuredVars(c) intersect keep.toSet)
       case Extend(c, n, e) => Extend(go(c), n, e)
       case Project(c, vs) => Project(go(c), vs)
       case Distinct(c) => Distinct(go(c))
@@ -279,12 +263,40 @@ final class DictStore private (val spark: SparkSession,
       // the binding comes from the literal, not an id; only the
       // named-graph enumeration (under GRAPH ?g) touches the store,
       // and it runs in id space with a k-row decode
-      case zl: ZeroLengthPath =>
-        val (df, vs) = compileZeroLengthConstIds(zl)
-        Materialized(df, vs, vs.toSet)
-      case leaf => leaf // Scan handled by isBlock; Service/Values/… stay
+      case ZeroLengthPath(s, o, g) =>
+        val vs = graphVar(g).toList ++ List(s, o).collect { case V(n) => n }
+        Materialized(Compiler.zeroLengthConst(spark, s, o, g, n =>
+          materialize(idQuads.filter(col("g").isNotNull)
+            .select(col("g").as(n)).dropDuplicates(), List(n))), vs, vs.toSet)
+      case leaf => leaf // Scan handled by isExtBlock; Service/Values/… stay
     }
     go(root)
+  }
+
+  /** ORDER BY + LIMIT, directly or through plain SELECT's projection:
+    * (child, sort keys, offset, limit, projected vars). */
+  private object TopK {
+    def unapply(op: Op): Option[(Op, List[(Expr, Boolean)], Long,
+        Option[Long], Option[List[String]])] = op match {
+      case Slice(Order(c, keys), off, lim) => Some((c, keys, off, lim, None))
+      case Slice(Project(Order(c, keys), vs), off, lim) =>
+        Some((c, keys, off, lim, Some(vs)))
+      case _ => None
+    }
+  }
+
+  /** DISTINCT/REDUCED over an id source, directly or through a
+    * projection of its vars: (source, deduplicated vars). */
+  private object IdDedup {
+    def unapply(op: Op): Option[(Op, List[String])] = (op match {
+      case Distinct(c) => Some(c)
+      case Reduced(c) => Some(c)
+      case _ => None
+    }).collect {
+      case Project(c, vs)
+        if idSource(c).isDefined && vs.forall(Algebra.vars(c).contains) => (c, vs)
+      case c if idSource(c).isDefined => (c, Algebra.varsOrdered(c))
+    }
   }
 
   /** A BGP block: a Join tree whose every leaf is a Scan. */
@@ -321,8 +333,8 @@ final class DictStore private (val spark: SparkSession,
     // during the join through hybrid-decoded term columns — the same
     // ExprCompiler.bool the standard compiler's joinCompat uses
     case LeftJoin(l, r, Some(cond)) =>
-      isExtSpine(l, r) && conjunctsOf(cond).map(normNeg).forall(e =>
-        (idPred(r, e) && exprVarsOf(e).subsetOf(Algebra.vars(r))) ||
+      isExtSpine(l, r) && conjuncts(cond).map(normalizeNotExists).forall(e =>
+        (idPred(r, e) && exprVars(e).subsetOf(Algebra.vars(r))) ||
           !hasExists(e))
     case Minus(l, r) => isExtSpine(l, r)
     // bag UNION works on ids directly (absent vars pad as NULL longs)
@@ -348,7 +360,7 @@ final class DictStore private (val spark: SparkSession,
         (dataSide(r) && valuesSide(l, r))
       ok && {
         val shared = Algebra.vars(l).intersect(Algebra.vars(r))
-        shared.subsetOf(assuredIdVars(l)) && shared.subsetOf(assuredIdVars(r))
+        shared.subsetOf(assuredVars(l)) && shared.subsetOf(assuredVars(r))
       }
     case _ => false
   }
@@ -364,24 +376,8 @@ final class DictStore private (val spark: SparkSession,
   private def isExtSpine(l: Op, r: Op): Boolean =
     isExtBlock(l) && isBlock(r) && {
       val shared = Algebra.vars(l).intersect(Algebra.vars(r))
-      shared.nonEmpty && shared.subsetOf(assuredIdVars(l))
+      shared.nonEmpty && shared.subsetOf(assuredVars(l))
     }
-
-  /** Vars bound in EVERY row of an extended block: all vars of pure
-    * BGPs; an OPTIONAL's right-only vars and a UNION's one-branch
-    * vars are merely possible. */
-  private def assuredIdVars(op: Op): Set[String] = op match {
-    case b if isBlock(b) => Algebra.vars(b)
-    case LeftJoin(l, _, _) => assuredIdVars(l)
-    case Minus(l, _) => assuredIdVars(l)
-    case Union(l, r) => assuredIdVars(l).intersect(assuredIdVars(r))
-    case Join(l, r) => assuredIdVars(l) ++ assuredIdVars(r)
-    case v: Values if idSafeValues(v) => Algebra.vars(v)
-    // a filter only DROPS rows: whatever was assured below it stays
-    // assured in the survivors
-    case Filter(c, _) => assuredIdVars(c)
-    case _ => Set.empty
-  }
 
   /** Any DISTINCT aggregate over `*` (expr = None) in the tree — the
     * one shape whose result depends on columns no variable reference
@@ -488,86 +484,33 @@ final class DictStore private (val spark: SparkSession,
     def cid(t: Term): Long = consts.getOrElse(t, -1L)
     val cidCol: Term => Column = t => lit(cid(t))
 
-    val gSel = (alp.g match {
-      case GraphVar(n) => Some(n)
-      case _ => None
-    }).map(n => col(n).as("g")).toSeq
-    val edgeFrame = flattenJoins(alp.edge).map(scanIds(_, consts))
-      .reduceLeft { (l, r) =>
-        val shared = l.columns.intersect(r.columns).toSeq
-        if (shared.isEmpty) l.crossJoin(r) else l.join(r, shared)
-      }
+    val gSel = graphVar(alp.g).map(n => col(n).as("g")).toSeq
     val edges = GraftColumnBridge.freshLeaf(
-      edgeFrame
+      idsOf(alp.edge, consts)
         .select(gSel ++ Seq(col(alp.innerS).as("src"),
           col(alp.innerO).as("dst")): _*)
         .dropDuplicates()
         .localCheckpoint(eager = false))
 
-    val paths = graft.sparql.Compiler.alpPaths(alp, edges, cidCol,
+    val paths = Compiler.alpPaths(alp, edges, cidCol,
       () => idGraphNodes(alp.g, cid),
       _ => throw new IllegalStateException(
         "zero-length with a constant endpoint is ineligible in id space"))
-    val (df, names) = graft.sparql.Compiler.alpFinish(paths, alp, cidCol)
+    val (df, names) = Compiler.alpFinish(paths, alp, cidCol)
     (materialize(df, names), names)
   }
 
-  /** All node ids (subject or object position) of the scoped graph —
-    * zero-length path domain, shared by the ALP and ZeroLengthPath
-    * id-space compilers. */
-  private def idGraphNodes(g: GraphSpec, cid: Term => Long): DataFrame = {
-    val scoped = g match {
-      case DefaultGraph => idQuads.filter(col("g").isNull)
-      case GraphTerm(t) => idQuads.filter(col("g") === lit(cid(t)))
-      case GraphVar(_) => idQuads.filter(col("g").isNotNull)
-    }
-    g match {
-      case GraphVar(_) =>
-        scoped.select(col("s").as("node"), col("g"))
-          .union(scoped.select(col("o").as("node"), col("g")))
-          .dropDuplicates()
-      case _ =>
-        scoped.select(col("s").as("node"))
-          .union(scoped.select(col("o").as("node")))
-          .dropDuplicates()
-    }
-  }
+  /** All node ids of the scoped graph, graph column `g` — the
+    * zero-length path domain of the ALP and ZeroLengthPath id-space
+    * compilers. */
+  private def idGraphNodes(g: GraphSpec, cid: Term => Long): DataFrame =
+    Compiler.graphNodes(scopedIds(g, cid), graphVar(g).map(_ => () => col("g")))
 
-  /** Constant-end (and both-constant) zero-length path: ≤ 1 row per
-    * graph context, built on the driver from the LITERAL term — a
-    * zero-length path binds a constant to itself even when the term
-    * is absent from the data, and an absent term has no dictionary
-    * id, so the binding must come from the literal. Under GRAPH ?g
-    * the named-graph set enumerates in id space (distinct over one
-    * long column) and decodes k rows. Mirrors the standard compiler's
-    * `compileZeroLength` constant cases exactly, including the
-    * empty-but-typed frame for unequal constant ends. */
-  private def compileZeroLengthConstIds(
-      zl: ZeroLengthPath): (DataFrame, List[String]) = {
-    val ec = new graft.sparql.ExprCompiler(_ => graft.sparql.TermFns.nullTerm)
-    val gVar = zl.g match { case GraphVar(n) => Some(n); case _ => None }
-    val binds: List[(String, Column)] = (zl.s, zl.o) match {
-      case (T(_), T(_)) => Nil // row presence decided below
-      case (V(sv), T(t)) => List(sv -> ec.termCol(t))
-      case (T(t), V(ov)) => List(ov -> ec.termCol(t))
-      case (V(_), V(_)) => throw new IllegalStateException(
-        "var-var zero-length is compiled by compileZeroLengthIds")
-    }
-    val names = gVar.toList ++ binds.map(_._1)
-    val bothConstEmpty = (zl.s, zl.o) match {
-      case (T(ts), T(to)) => ts != to
-      case _ => false
-    }
-    val base: DataFrame = gVar match {
-      case Some(n) =>
-        // named graphs in id space; decode the k surviving graph terms
-        materialize(idQuads.filter(col("g").isNotNull)
-          .select(col("g").as(n)).dropDuplicates(), List(n))
-      case None => spark.range(1).toDF()
-    }
-    val rows = if (bothConstEmpty) base.limit(0) else base
-    val df = binds.foldLeft(rows) { case (d, (v, c)) => d.withColumn(v, c) }
-    (df.select(names.map(col): _*), names)
+  /** The long quad table restricted to a graph scope. */
+  private def scopedIds(g: GraphSpec, id: Term => Long): DataFrame = g match {
+    case DefaultGraph => idQuads.filter(col("g").isNull)
+    case GraphTerm(t) => idQuads.filter(col("g") === lit(id(t)))
+    case GraphVar(_) => idQuads.filter(col("g").isNotNull)
   }
 
   /** Var-var zero-length path: every node of the scoped graph bound
@@ -576,7 +519,7 @@ final class DictStore private (val spark: SparkSession,
                                    g: GraphSpec): (DataFrame, List[String]) = {
     val cids = constIdsOf(g match { case GraphTerm(t) => List(t); case _ => Nil })
     val nodes = idGraphNodes(g, t => cids.getOrElse(t, -1L))
-    val gVar = g match { case GraphVar(n) => Some(n); case _ => None }
+    val gVar = graphVar(g)
     val gSel = gVar.map(_ => col("g")).toList
     val names = gVar.toList ++ (if (sv == ov) List(sv) else List(sv, ov))
     val df0 =
@@ -588,15 +531,10 @@ final class DictStore private (val spark: SparkSession,
 
   // ----- id-space block compilation -----
 
-  /** All constants an extended block's id compilation needs: scan
-    * constants plus ConstE terms inside OPTIONAL conditions. */
-  private def blockConsts(op: Op): Map[Term, Long] =
-    constIdsOf((scanConstTerms(allScans(op)) ++ condConstTerms(op)).distinct)
-
   private def condConstTerms(op: Op): List[Term] = op match {
     case LeftJoin(l, r, c) =>
       condConstTerms(l) ++ condConstTerms(r) ++
-        c.toList.flatMap(conjunctsOf).flatMap {
+        c.toList.flatMap(conjuncts).flatMap {
           case FuncE(_, args) => args.collect { case ConstE(t) => t }
           case _ => Nil
         }
@@ -611,15 +549,6 @@ final class DictStore private (val spark: SparkSession,
     case VarE(v) => col(v)
     case ConstE(t) => lit(consts.getOrElse(t, -1L))
     case other => throw new IllegalStateException(s"not an id operand: $other")
-  }
-
-  private def exprVarsOf(e: Expr): Set[String] = e match {
-    case VarE(n) => Set(n)
-    case ConstE(_) => Set.empty
-    case FuncE(_, args) => args.flatMap(exprVarsOf).toSet
-    case InE(x, l, _) => (x :: l).flatMap(exprVarsOf).toSet
-    case ExistsE(p, _) => Algebra.vars(p)
-    case AggE(_, _, eo, _) => eo.toList.flatMap(exprVarsOf).toSet
   }
 
   /** Term-IDENTITY predicate over `scope`'s vars: sameTerm for any
@@ -639,10 +568,6 @@ final class DictStore private (val spark: SparkSession,
     case _ => false
   }
 
-  private def compileExtBlock(block: Op, keep: List[String]): DataFrame =
-    materialize(idsOf(block, blockConsts(block)), keep,
-      Algebra.vars(block) -- assuredIdVars(block))
-
   /** The id-space frame of an extended block, shared by the block,
     * EXISTS and ALP compilers. */
   private def idsOf(op: Op, consts: Map[Term, Long],
@@ -654,7 +579,7 @@ final class DictStore private (val spark: SparkSession,
       // binding agree on the value, and a second copy would otherwise
       // enter the equi-join key set, where NULL keys drop rows
       var remaining = typedWanted
-      flattenJoins(b).map { sc =>
+      allScans(b).map { sc =>
         val tvO = sc.o match {
           case V(n) if remaining.contains(n) => remaining -= n; Some(n)
           case _ => None
@@ -665,10 +590,7 @@ final class DictStore private (val spark: SparkSession,
           case _ => None
         }
         scanIds(sc, consts, tvO, tvS)
-      }.reduceLeft { (l, r) =>
-        val shared = l.columns.intersect(r.columns).toSeq
-        if (shared.isEmpty) l.crossJoin(r) else l.join(r, shared)
-      }
+      }.reduceLeft(naturalJoin)
     case LeftJoin(l, r, cond) =>
       // right-only conditions pre-filter the right side BEFORE the
       // join (equivalent because they reference no left var: matched
@@ -678,8 +600,8 @@ final class DictStore private (val spark: SparkSession,
       // joins — the OPTIONAL face of the typed FILTER fast path).
       // Everything else evaluates on the MERGED row during the join
       // (guarded eligible in isExtBlock).
-      val conjs = cond.toList.flatMap(conjunctsOf).map(normNeg)
-      def rightOnly(e: Expr) = exprVarsOf(e).subsetOf(Algebra.vars(r))
+      val conjs = cond.toList.flatMap(conjuncts).map(normalizeNotExists)
+      def rightOnly(e: Expr) = exprVars(e).subsetOf(Algebra.vars(r))
       val (preConjs, rest) = conjs.partition(e => idPred(r, e) && rightOnly(e))
       val rTypedObjVars: Set[String] = typedSidecarVars(r)
       val (typedPre, mergedConjs) = rest.partition(e =>
@@ -705,8 +627,8 @@ final class DictStore private (val spark: SparkSession,
         // right-only vars the right copy — the merged-row resolver of
         // the standard compiler's joinCompat, restricted to the vars
         // the condition actually references
-        val condVars = mergedConjs.flatMap(exprVarsOf).distinct
-        val lNullable = Algebra.vars(l) -- assuredIdVars(l)
+        val condVars = mergedConjs.flatMap(exprVars).distinct
+        val lNullable = Algebra.vars(l) -- assuredVars(l)
         val ldD = decodeVars(ld,
           condVars.filter(ld.columns.contains), lNullable)
         val rdD = decodeVars(rd,
@@ -731,17 +653,11 @@ final class DictStore private (val spark: SparkSession,
       val (ld, rd) = (idsOf(l, consts), idsOf(r, consts))
       val shared = ld.columns.intersect(rd.columns).toSeq
       ld.join(rd.select(shared.map(col): _*), shared, "left_anti")
-    case Union(l, r) =>
-      val (ld, rd) = (idsOf(l, consts), idsOf(r, consts))
-      val allCols = (ld.columns ++ rd.columns).distinct.toIndexedSeq
-      def pad(df: DataFrame) = df.select(allCols.map(c =>
-        (if (df.columns.contains(c)) col(c)
-         else lit(null).cast(LongType)).as(c)): _*)
-      pad(ld).unionByName(pad(rd))
+    case Union(l, r) => // absent vars pad as NULL ids
+      Compiler.unionPadded(idsOf(l, consts), idsOf(r, consts),
+        lit(null).cast(LongType))
     case Join(l, r) => // mixed join above unions/optionals (guarded assured)
-      val (ld, rd) = (idsOf(l, consts), idsOf(r, consts))
-      val shared = ld.columns.intersect(rd.columns).toSeq
-      if (shared.isEmpty) ld.crossJoin(rd) else ld.join(rd, shared)
+      naturalJoin(idsOf(l, consts), idsOf(r, consts))
     case Values(vs, rows) => // probe list as a local long relation
       val schema = StructType(vs.map(StructField(_, LongType, nullable = false)))
       val data = new java.util.ArrayList[org.apache.spark.sql.Row]()
@@ -751,6 +667,14 @@ final class DictStore private (val spark: SparkSession,
       }
       spark.createDataFrame(data, schema)
     case other => throw new IllegalStateException(s"not an ext block: $other")
+  }
+
+  /** Join two id frames on all their shared columns — plain long
+    * equality, since every shared var is assured on both sides — or
+    * cross join them when they share none. */
+  private def naturalJoin(l: DataFrame, r: DataFrame): DataFrame = {
+    val shared = l.columns.intersect(r.columns).toSeq
+    if (shared.isEmpty) l.crossJoin(r) else l.join(r, shared)
   }
 
   // ----- id-space aggregation -----
@@ -811,10 +735,19 @@ final class DictStore private (val spark: SparkSession,
 
   private def skCol(v: String): String = s"__sk_$v"
 
+  /** The variable `e` names when it is a bare reference to one of
+    * `scope`'s vars — the keys and aggregate inputs that stay ids. */
+  private def plainVar(e: Expr, scope: Set[String]): Option[String] = e match {
+    case VarE(v) if scope.contains(v) => Some(v)
+    case _ => None
+  }
+
   /** One dict join per var, projecting `proj(term)` as `name(var)` —
     * LEFT OUTER where an OPTIONAL may have left the id NULL (unbound
-    * stays unbound). Shared by the term decode ([[decodeVars]]) and
-    * the sort-key join ([[joinSortKeys]]), so the two cannot drift. */
+    * stays unbound). Shared by late materialization ([[materialize]]:
+    * the term replaces the id column), the term decode
+    * ([[decodeVars]]) and the sort-key join ([[joinSortKeys]]), so the
+    * three cannot drift. */
   private def joinDictCols(df0: DataFrame, vars: List[String],
                            nullable: Set[String], proj: Column => Column,
                            name: String => String): DataFrame = {
@@ -829,7 +762,7 @@ final class DictStore private (val spark: SparkSession,
     vars.foreach { v =>
       df = df.join(d, col(v) === col("__ji"),
         if (nullable.contains(v)) "left_outer" else "inner")
-        .drop("__ji")
+        .drop("__ji", name(v)) // the id column itself when name(v) == v
         .withColumnRenamed("__jv", name(v))
     }
     df
@@ -837,39 +770,33 @@ final class DictStore private (val spark: SparkSession,
 
   private def compileGroupCountIds(c: Op, keys: List[String],
                                    aggs: List[(String, AggE)]): DataFrame = {
-    val nullable = Algebra.vars(c) -- assuredIdVars(c)
+    val nullable = Algebra.vars(c) -- assuredVars(c)
     // fast paths that never touch term values: COUNT/SAMPLE over a
     // plain block var run on ids, MIN/MAX over one on dict sort keys
-    def plainVar(a: AggE): Option[String] = a.expr match {
-      case Some(VarE(v)) if Algebra.vars(c).contains(v) => Some(v)
-      case _ => None
-    }
+    def plain(a: AggE): Option[String] =
+      a.expr.flatMap(plainVar(_, Algebra.vars(c)))
     // DISTINCT SUM/AVG takes the standard compiler's pre-dedup side
     // pass, transplanted to id space (see below)
     val (distAggs, aggs1) = aggs.partition { case (_, a) =>
       a.distinct && (a.func == "SUM" || a.func == "AVG") }
     val (countAggs, rest) = aggs1.partition { case (_, a) =>
-      a.func == "COUNT" && (a.expr.isEmpty || plainVar(a).isDefined) }
+      a.func == "COUNT" && (a.expr.isEmpty || plain(a).isDefined) }
     val (sampleAggs, rest2) = rest.partition { case (_, a) =>
-      a.func == "SAMPLE" && plainVar(a).isDefined }
+      a.func == "SAMPLE" && plain(a).isDefined }
     val (mmAggs, valueAggs) = rest2.partition { case (_, a) =>
-      (a.func == "MIN" || a.func == "MAX") && plainVar(a).isDefined }
+      (a.func == "MIN" || a.func == "MAX") && plain(a).isDefined }
     // SUM/AVG/GROUP_CONCAT — and ANY aggregate over a computed
     // expression — consume term values: hybrid-decode the referenced
     // vars and feed the standard ExprCompiler value into the SHARED
     // accumulator. Group keys stay longs either way.
-    val mmVars = mmAggs.map(a => plainVar(a._2).get).distinct
+    val mmVars = mmAggs.map(a => plain(a._2).get).distinct
     val valueVars = valueAggs
-      .flatMap(a => a._2.expr.toList.flatMap(exprVarsOf))
+      .flatMap(a => a._2.expr.toList.flatMap(exprVars))
       .filter(Algebra.vars(c).contains).distinct
     // an eligible FILTER below the group stays in id space too: the
     // aggregation then groups long keys over the filtered frame and
     // only the GROUP results decode
-    val (base, conjs) = idSource(c).getOrElse(
-      throw new IllegalStateException(s"not an id source: $c"))
-    val df0 =
-      if (conjs.nonEmpty) filterIdsFrame(base, conjs)
-      else idsOf(base, blockConsts(base))
+    val df0 = idFrame(c)
     // value decode FIRST so joinSortKeys can derive a var's sort key
     // from its already-decoded term instead of a second dict join
     val df = joinSortKeys(decodeVars(df0, valueVars, nullable),
@@ -887,10 +814,10 @@ final class DictStore private (val spark: SparkSession,
       countAggs.map { case (n, a) =>
         graft.sparql.TermFns.intTerm(countCol(a)).as(n) } ++
       sampleAggs.map { case (n, a) =>
-        first(col(plainVar(a).get), ignoreNulls = true).as(n) // a member id
+        first(col(plain(a).get), ignoreNulls = true).as(n) // a member id
       } ++
       mmAggs.map { case (n, a) =>
-        val v = plainVar(a).get
+        val v = plain(a).get
         // same shape as the standard compiler's min(struct(sortKey,
         // term)): NULL-out unbound rows so min/max skip them
         val kt = when(col(v).isNotNull,
@@ -900,61 +827,27 @@ final class DictStore private (val spark: SparkSession,
       valueAggs.map { case (n, a) =>
         Compiler.aggAccumulator(Some(tvEc.value(a.expr.get)), Nil, a).as(n)
       }
-    var grouped =
-      if (aggCols.isEmpty) {
-        // all aggregates went to the DISTINCT side path; SPARQL still
-        // returns one solution per group (one total when ungrouped,
-        // even over an empty match) — same seeding as compileGroup
-        if (keys.isEmpty) df.sparkSession.range(1).select()
-        else df.select(keys.map(col): _*).dropDuplicates()
-      }
-      else if (keys.isEmpty) df.agg(aggCols.head, aggCols.tail: _*)
-      else df.groupBy(keys.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
+    var grouped = Compiler.groupPass(df, keys, aggCols)
     // DISTINCT SUM/AVG side pass in id space: dedup (long keys, value)
     // FIRST — for a plain var the value is its 8-byte id (the dict
-    // bijection makes id-distinctness ≡ term-distinctness), for a
-    // computed expression the hybrid-evaluated term — then aggregate
-    // the deduped stream non-distinct through the shared accumulator
-    // and join back on the long keys (null-safe: an optional group key
-    // can be a NULL id)
+    // bijection makes id-distinctness ≡ term-distinctness), decoded
+    // after the dedup (LEFT OUTER — unbound contributes like standard);
+    // for a computed expression the hybrid-evaluated term — then the
+    // shared side pass aggregates and joins back on the long keys
     distAggs.foreach { case (n, a) =>
-      val (dedup, valueCol) = plainVar(a) match {
+      val (deduped, value) = plain(a) match {
         case Some(v) =>
-          val d = df0.select((keys :+ v).distinct.map(col): _*).dropDuplicates()
-          (d, col(v))
+          (decodeVars(df0.select((keys :+ v).distinct.map(col): _*)
+            .dropDuplicates(), List(v), Set(v)), col(tvCol(v)))
         case None =>
-          val vs = a.expr.toList.flatMap(exprVarsOf)
+          val vs = a.expr.toList.flatMap(exprVars)
             .filter(Algebra.vars(c).contains).distinct
           val withTv = decodeVars(df0, vs, nullable)
-          val d = withTv
-            .select(keys.map(col) :+
-              tvExprCompiler(withTv).value(a.expr.get).as("__v"): _*)
-            .dropDuplicates()
-          (d, col("__v"))
+          (withTv.select(keys.map(col) :+
+            tvExprCompiler(withTv).value(a.expr.get).as("__v"): _*)
+            .dropDuplicates(), col("__v"))
       }
-      // a plain-var dedup carries ids: decode the value for the
-      // accumulator (LEFT OUTER — unbound contributes like standard)
-      val (sideIn, vCol) = plainVar(a) match {
-        case Some(v) => (decodeVars(dedup, List(v), Set(v)), col(tvCol(v)))
-        case None => (dedup, valueCol)
-      }
-      val side =
-        if (keys.isEmpty)
-          sideIn.agg(Compiler.aggAccumulator(Some(vCol), Nil,
-            a.copy(distinct = false)).as(n))
-        else sideIn.groupBy(keys.map(col): _*)
-          .agg(Compiler.aggAccumulator(Some(vCol), Nil,
-            a.copy(distinct = false)).as(n))
-      grouped =
-        if (keys.isEmpty) grouped.crossJoin(side)
-        else {
-          val renamed = keys.foldLeft(side)((d, k) =>
-            d.withColumnRenamed(k, s"__k_$k"))
-          val cond = keys.map(k => grouped(k) <=> renamed(s"__k_$k"))
-            .reduce(_ && _)
-          grouped.join(renamed, cond, "inner")
-            .drop(keys.map(k => s"__k_$k"): _*)
-        }
+      grouped = Compiler.joinSidePass(grouped, deduped, value, keys, n, a)
     }
     // unwrap the min/max witness to a bare id; finish value aggregates
     // to their term columns (shared finisher)
@@ -974,16 +867,6 @@ final class DictStore private (val spark: SparkSession,
 
   // ----- id-space ORDER BY + LIMIT (top-k with late decode) -----
 
-  /** Top-k over a block is id-expressible when every sort key is an
-    * EXISTS-free scalar and the window is Int-sized: plain-variable
-    * keys take their sort key from a dictionary projection, computed
-    * keys hybrid-decode their variables and sort on
-    * sortKey(ExprCompiler.value) — the same key the standard
-    * compiler's ORDER BY builds. The sort total-orders (skey, id)
-    * rows, the limit keeps offset+k of them, and the dictionary
-    * decodes ONLY those — at scale this turns a full-result decode +
-    * TakeOrdered over term structs into a TakeOrdered over longs plus
-    * a k-row join. */
   /** An op the id compiler can turn into a raw ID frame: an extended
     * block, or an eligible FILTER directly above one. The filter's
     * conjunct list rides along so a consumer can reason about what
@@ -994,6 +877,22 @@ final class DictStore private (val spark: SparkSession,
     case _ => None
   }
 
+  /** The raw id frame of an id source (see [[idSource]]). */
+  private def idFrame(c: Op): DataFrame = idSource(c) match {
+    case Some((base, conjs)) => filterIdsFrame(base, conjs)
+    case None => throw new IllegalStateException(s"not an id source: $c")
+  }
+
+  /** Top-k over a block is id-expressible when every sort key is an
+    * EXISTS-free scalar and the window is Int-sized: plain-variable
+    * keys take their sort key from a dictionary projection, computed
+    * keys hybrid-decode their variables and sort on
+    * sortKey(ExprCompiler.value) — the same key the standard
+    * compiler's ORDER BY builds. The sort total-orders (skey, id)
+    * rows, the limit keeps offset+k of them, and the dictionary
+    * decodes ONLY those — at scale this turns a full-result decode +
+    * TakeOrdered over term structs into a TakeOrdered over longs plus
+    * a k-row join. */
   private def orderSliceEligible(c: Op, keys: List[(Expr, Boolean)],
                                  off: Long, lim: Option[Long]): Boolean =
     idSource(c).isDefined && keys.nonEmpty &&
@@ -1006,12 +905,8 @@ final class DictStore private (val spark: SparkSession,
                              keep: List[String]): DataFrame = {
     val (base, conjs) = idSource(c).getOrElse(
       throw new IllegalStateException(s"not an id source: $c"))
-    val nullable = Algebra.vars(base) -- assuredIdVars(base)
+    val nullable = Algebra.vars(base) -- assuredVars(base)
     val blockVars = Algebra.vars(base)
-    def isPlain(e: Expr): Boolean = e match {
-      case VarE(v) => blockVars.contains(v)
-      case _ => false
-    }
     // sidecar threshold top-k: when the PRIMARY sort key is a plain
     // object var with sidecar columns, the lexicographic order lets a
     // first-key boundary prune regardless of what the later keys are
@@ -1031,10 +926,8 @@ final class DictStore private (val spark: SparkSession,
           off, lim, keep, nullable, blockVars)
       case _ => ()
     }
-    val df0 =
-      if (conjs.nonEmpty) filterIdsFrame(base, conjs)
-      else idsOf(base, blockConsts(base))
-    finishTopK(df0, keys, off, lim, keep, nullable, blockVars)
+    finishTopK(filterIdsFrame(base, conjs), keys, off, lim, keep, nullable,
+      blockVars)
   }
 
   /** The common top-k tail: join/derive REAL sort keys onto an id
@@ -1046,33 +939,27 @@ final class DictStore private (val spark: SparkSession,
                          off: Long, lim: Long, keep: List[String],
                          nullable: Set[String],
                          blockVars: Set[String]): DataFrame = {
-    def isPlain(e: Expr): Boolean = e match {
-      case VarE(v) => blockVars.contains(v)
-      case _ => false
-    }
-    val sortVars = keys.collect { case (VarE(v), _) if isPlain(VarE(v)) => v }
-      .distinct
-    val exprKeys = keys.map(_._1).filterNot(isPlain).distinct
-    val exprVars = exprKeys.flatMap(exprVarsOf)
+    val sortVars = keys.flatMap(k => plainVar(k._1, blockVars)).distinct
+    val exprKeys = keys.map(_._1).filter(plainVar(_, blockVars).isEmpty).distinct
+    val keyVars = exprKeys.flatMap(exprVars)
       .filter(blockVars.contains).distinct
     // expr-var decode FIRST so joinSortKeys can derive a plain sort
     // var's key from its already-decoded term instead of a second join
-    var df = joinSortKeys(decodeVars(df0, exprVars, nullable),
+    var df = joinSortKeys(decodeVars(df0, keyVars, nullable),
       sortVars, nullable)
     val tvEc = tvExprCompiler(df)
     val exprSk = exprKeys.zipWithIndex.map { case (e, i) =>
       e -> s"__ske_$i" }.toMap
     exprSk.foreach { case (e, n) =>
       df = df.withColumn(n, graft.sparql.TermFns.sortKey(tvEc.value(e))) }
-    df = df.drop(exprVars.map(tvCol): _*)
+    df = df.drop(keyVars.map(tvCol): _*)
     // NULL skey ⇔ unbound var; Spark's default NULLS FIRST (asc) /
     // NULLS LAST (desc) coincides with the standard compiler's rank-0
     // unbound row, which sorts before every bound term (computed keys
     // are never NULL — sortKey itself maps unbound to rank 0)
     def sortCols = keys.map { case (e, asc) =>
-      val k = if (isPlain(e)) {
-        val VarE(v) = e: @unchecked; col(skCol(v))
-      } else col(exprSk(e))
+      val k = plainVar(e, blockVars).map(v => col(skCol(v)))
+        .getOrElse(col(exprSk(e)))
       if (asc) k.asc else k.desc
     }
     val topIds = df.orderBy(sortCols: _*).limit((off + lim).toInt)
@@ -1179,30 +1066,11 @@ final class DictStore private (val spark: SparkSession,
   /** Project-then-distinct on long tuples; the dict joins in after
     * the dedup, so it sees only surviving rows. An eligible FILTER
     * below the distinct stays in id space the same way. */
-  private def compileDistinctIds(c: Op, vs: List[String]): DataFrame = {
-    val (base, conjs) = idSource(c).getOrElse(
-      throw new IllegalStateException(s"not an id source: $c"))
-    val df =
-      if (conjs.nonEmpty) filterIdsFrame(base, conjs)
-      else idsOf(base, blockConsts(base))
-    materialize(df.select(vs.map(col): _*).dropDuplicates(),
-      vs, Algebra.vars(c) -- assuredIdVars(c))
-  }
+  private def compileDistinctIds(c: Op, vs: List[String]): DataFrame =
+    materialize(idFrame(c).select(vs.map(col): _*).dropDuplicates(),
+      vs, Algebra.vars(c) -- assuredVars(c))
 
   // ----- id-space FILTER [NOT] EXISTS -----
-
-  private def conjunctsOf(e: Expr): List[Expr] = e match {
-    case FuncE("&&", args) => args.flatMap(conjunctsOf)
-    case other => List(other)
-  }
-
-  private def normNeg(e: Expr): Expr = e match {
-    case FuncE("!", List(inner)) => normNeg(inner) match {
-      case ExistsE(p, n) => ExistsE(p, !n)
-      case o => FuncE("!", List(o))
-    }
-    case o => o
-  }
 
   /** Any [NOT] EXISTS anywhere inside a scalar expression — such a
     * conjunct needs the standard compiler's correlated-subpattern
@@ -1227,7 +1095,7 @@ final class DictStore private (val spark: SparkSession,
   private def stripFilters(op: Op): Option[(Op, List[(Expr, Set[String])])] =
     op match {
       case Filter(c, e) => stripFilters(c).map { case (c2, cs) =>
-        (c2, cs ++ conjunctsOf(e).map(normNeg)
+        (c2, cs ++ conjuncts(e).map(normalizeNotExists)
           .map(x => (x, Algebra.vars(c2))))
       }
       case Join(a, b) =>
@@ -1247,13 +1115,13 @@ final class DictStore private (val spark: SparkSession,
   private def existsEligible(c: Op, p: Op): Boolean =
     stripFilters(p).exists { case (cleaned, tagged) =>
       val shared = Algebra.vars(c).intersect(Algebra.vars(cleaned))
-      shared.nonEmpty && shared.subsetOf(assuredIdVars(c)) &&
+      shared.nonEmpty && shared.subsetOf(assuredVars(c)) &&
         tagged.forall { case (e, scope) =>
           !hasExists(e) && {
             val siblingRefs =
-              (exprVarsOf(e) -- scope).intersect(Algebra.vars(cleaned))
+              (exprVars(e) -- scope).intersect(Algebra.vars(cleaned))
             val correlated =
-              (exprVarsOf(e) -- scope).intersect(Algebra.vars(c)).nonEmpty
+              (exprVars(e) -- scope).intersect(Algebra.vars(c)).nonEmpty
             // correlated conjuncts evaluate post-join over the full
             // scope (sibling refs included, same as the standard
             // env); a LOCAL one evaluates at its position, so any
@@ -1290,7 +1158,7 @@ final class DictStore private (val spark: SparkSession,
     *    At scale this filters early over longs-plus-one-term instead
     *    of forcing the whole query back onto term structs. */
   private def filterEligible(c: Op, cond: Expr): Option[List[Expr]] = {
-    val cs = conjunctsOf(cond).map(normNeg)
+    val cs = conjuncts(cond).map(normalizeNotExists)
     val ok = cs.nonEmpty && isExtBlock(c) && cs.forall {
       case ExistsE(p, _) => existsEligible(c, p)
       case e => idPred(c, e) || !hasExists(e)
@@ -1448,7 +1316,7 @@ final class DictStore private (val spark: SparkSession,
   private def compileFilterIds(child: Op, conjs: List[Expr],
                                keep: List[String]): DataFrame =
     materialize(filterIdsFrame(child, conjs), keep,
-      Algebra.vars(child) -- assuredIdVars(child))
+      Algebra.vars(child) -- assuredVars(child))
 
   /** Everything [[compileFilterIds]] does short of the final decode:
     * the filtered ID frame, for consumers that keep working in id
@@ -1476,7 +1344,7 @@ final class DictStore private (val spark: SparkSession,
     }
     val consts = constIdsOf((scanConstTerms(allScans(child)) ++
       condConstTerms(child) ++ condTerms).distinct)
-    val nullable = Algebra.vars(child) -- assuredIdVars(child)
+    val nullable = Algebra.vars(child) -- assuredVars(child)
     var df = idsOf(child, consts, typedVars)
     idConjs.foreach {
       case FuncE(_, List(a, b)) =>
@@ -1488,7 +1356,7 @@ final class DictStore private (val spark: SparkSession,
       df = df.drop((typedVars -- keepTyped).toSeq.flatMap(v =>
         Seq(tcCol(v), tdCol(v), teCol(v), ttCol(v))): _*)
     if (hybridConjs.nonEmpty) {
-      val condVars = hybridConjs.flatMap(exprVarsOf)
+      val condVars = hybridConjs.flatMap(exprVars)
         .filter(Algebra.vars(child).contains).distinct
       val decoded = decodeVars(df, condVars, nullable)
       val ec = tvExprCompiler(decoded)
@@ -1508,11 +1376,11 @@ final class DictStore private (val spark: SparkSession,
         // local conjunct references a sibling branch, so evaluating
         // locals on the joined block frame is position-equivalent)
         val (corr, local) = tagged.partition { case (e, scope) =>
-          (exprVarsOf(e) -- scope).intersect(leftVars).nonEmpty
+          (exprVars(e) -- scope).intersect(leftVars).nonEmpty
         }
         var pd = idsOf(cleaned, consts)
         if (local.nonEmpty) {
-          val lv = local.flatMap(t => exprVarsOf(t._1))
+          val lv = local.flatMap(t => exprVars(t._1))
             .filter(cleanedVars.contains).distinct
           val dec = decodeVars(pd, lv, Set.empty) // pure block: assured
           val ec = tvExprCompiler(dec)
@@ -1529,7 +1397,7 @@ final class DictStore private (val spark: SparkSession,
           // evaluate on hybrid-decoded term columns from BOTH frames
           // (sub side wins name resolution, like the standard env)
           val corrEs = corr.map(_._1)
-          val corrVars = corrEs.flatMap(exprVarsOf).distinct
+          val corrVars = corrEs.flatMap(exprVars).distinct
           val subCorrVars = corrVars.filter(cleanedVars.contains)
           val outerCorrVars = corrVars.filter(v =>
             !cleanedVars.contains(v) && df.columns.contains(v))
@@ -1560,19 +1428,13 @@ final class DictStore private (val spark: SparkSession,
     * term, so it rides through [[materialize]] as `carry`. */
   private def compileExtendIds(c: Op, n: String, e: Expr,
                                keep: List[String]): DataFrame = {
-    val nullable = Algebra.vars(c) -- assuredIdVars(c)
-    val condVars = exprVarsOf(e).toList.filter(Algebra.vars(c).contains)
-    val df = decodeVars(idsOf(c, blockConsts(c)), condVars, nullable)
+    val nullable = Algebra.vars(c) -- assuredVars(c)
+    val condVars = exprVars(e).toList.filter(Algebra.vars(c).contains)
+    val df = decodeVars(filterIdsFrame(c, Nil), condVars, nullable)
     val bound = df.withColumn(n, tvExprCompiler(df).value(e))
       .drop(condVars.map(tvCol): _*)
     materialize(bound, keep.filterNot(_ == n), nullable,
       carry = if (keep.contains(n)) List(n) else Nil)
-  }
-
-  private def flattenJoins(op: Op): List[Scan] = op match {
-    case s: Scan => List(s)
-    case Join(l, r) => flattenJoins(l) ++ flattenJoins(r)
-    case other => throw new IllegalStateException(s"not a BGP leaf: $other")
   }
 
   /** Every Scan leaf of an extended block (constant-lookup scope). */
@@ -1639,13 +1501,8 @@ final class DictStore private (val spark: SparkSession,
   private def scanIds(sc: Scan, consts: Map[Term, Long],
                       typedVar: Option[String] = None,
                       typedSubjVar: Option[String] = None): DataFrame = {
-    var df = idQuads
     def id(t: Term): Long = consts.getOrElse(t, -1L)
-    sc.g match {
-      case DefaultGraph => df = df.filter(col("g").isNull)
-      case GraphTerm(t) => df = df.filter(col("g") === lit(id(t)))
-      case GraphVar(_) => df = df.filter(col("g").isNotNull)
-    }
+    var df = scopedIds(sc.g, id)
     Seq("s" -> sc.s, "p" -> sc.p, "o" -> sc.o).foreach {
       case (c, T(t)) => df = df.filter(col(c) === lit(id(t)))
       case _ => ()
@@ -1686,19 +1543,8 @@ final class DictStore private (val spark: SparkSession,
   private def materialize(idDf: DataFrame, keep: List[String],
                           nullable: Set[String] = Set.empty,
                           carry: List[String] = Nil): DataFrame = {
-    var df = idDf
-    // canonical dict-side subtree (fixed alias names) for the same
-    // ReuseExchange sharing as [[joinDictCols]]: one dict scan + one
-    // broadcast build per query, not per materialized var
-    val d = dict.select(col("id").as("__mid"), col("term").as("__mt"))
-    keep.foreach { v =>
-      if (df.columns.contains(v)) {
-        df = df.join(d, col(v) === col("__mid"),
-            if (nullable.contains(v)) "left_outer" else "inner")
-          .drop(v, "__mid")
-          .withColumnRenamed("__mt", v)
-      }
-    }
+    val df = joinDictCols(idDf, keep.filter(idDf.columns.contains), nullable,
+      identity, identity)
     // `carry`: already-term columns to keep as-is (aggregate outputs)
     df.select((keep.filter(df.columns.contains) ++ carry).map(col): _*)
   }

@@ -113,6 +113,12 @@ object Algebra {
                                        includeZero: Boolean,
                                        g: GraphSpec) extends Op
 
+  /** The variable of a GRAPH ?g scope. */
+  def graphVar(g: GraphSpec): Option[String] = g match {
+    case GraphVar(n) => Some(n)
+    case _ => None
+  }
+
   /** Statically-known variables an operator MAY bind (the analogue of
     * rdf4j's getBindingNames, Interpreter.scala:152-162). */
   def vars(op: Op): Set[String] = op match {
@@ -145,7 +151,8 @@ object Algebra {
   }
 
   /** Variables an operator is GUARANTEED to bind on every row (the
-    * analogue of getAssuredBindingNames) — the safe equi-join key set. */
+    * analogue of getAssuredBindingNames) — the safe equi-join key set
+    * of both the term-struct and the dictionary-id compiler. */
   def assuredVars(op: Op): Set[String] = op match {
     case Scan(_, _, _, _) | ZeroLengthPath(_, _, _) |
          ArbitraryLengthPath(_, _, _, _, _, _, _) => vars(op)
@@ -256,5 +263,15 @@ object Algebra {
     case InE(x, list, _) => exprVars(x) ++ list.flatMap(exprVars)
     case ExistsE(p, _) => vars(p)
     case AggE(_, _, ex, _) => ex.map(exprVars).getOrElse(Set.empty)
+  }
+
+  /** `!EXISTS{..}` ≡ `NOT EXISTS{..}` (and `!NOT EXISTS` ≡ EXISTS), so
+    * both compilers see every [NOT] EXISTS conjunct as an [[ExistsE]]. */
+  def normalizeNotExists(e: Expr): Expr = e match {
+    case FuncE("!", List(inner)) => normalizeNotExists(inner) match {
+      case ExistsE(p, n) => ExistsE(p, !n)
+      case other => FuncE("!", List(other))
+    }
+    case other => other
   }
 }

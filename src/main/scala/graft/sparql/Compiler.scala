@@ -83,7 +83,7 @@ object Compiler {
                               constCol: Term => Column,
                               graphNodes: () => DataFrame,
                               zeroSelf: Column => DataFrame): DataFrame = {
-    val gVar = alp.g match { case GraphVar(n) => Some(n); case _ => None }
+    val gVar = graphVar(alp.g)
     val gKey = gVar.map(_ => "g").toSeq
     val reversed = edges.select(
       gVar.map(_ => col("g")).toSeq ++
@@ -126,7 +126,7 @@ object Compiler {
     * existence probes. Returns the frame and its output names. */
   private[graft] def alpFinish(paths: DataFrame, alp: ArbitraryLengthPath,
                                constCol: Term => Column): (DataFrame, List[String]) = {
-    val gVar = alp.g match { case GraphVar(n) => Some(n); case _ => None }
+    val gVar = graphVar(alp.g)
     var df = paths
     val sel = scala.collection.mutable.ArrayBuffer.empty[Column]
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -227,6 +227,92 @@ object Compiler {
     case "SAMPLE" => t.getField("t")
     case "GROUP_CONCAT" =>
       strTerm(array_join(array_sort(t.getField("items")), a.separator))
+  }
+
+  // ----- representation-blind operator tails -----
+  // Shared by this compiler (term-struct columns) and the dict store's
+  // id-space compiler (dictionary-id columns): neither reads a value.
+
+  /** Bag UNION, each side padded to the union of both column sets with
+    * `nullCol` (unbound: a NULL term struct, or a NULL id). */
+  private[graft] def unionPadded(l: DataFrame, r: DataFrame,
+                                 nullCol: Column): DataFrame = {
+    val allCols = (l.columns ++ r.columns).distinct.toIndexedSeq
+    def pad(df: DataFrame) = df.select(allCols.map(c =>
+      (if (df.columns.contains(c)) df(c) else nullCol).as(c)): _*)
+    pad(l).unionByName(pad(r))
+  }
+
+  /** The main aggregation pass: `aggCols` grouped by `keys`. When every
+    * aggregate went to a DISTINCT SUM/AVG side pass, it still seeds one
+    * row per group — and, ungrouped, one literal row, because SPARQL
+    * returns exactly one solution even over an empty match
+    * (`df.select().dropDuplicates()` would be empty, and the side-pass
+    * join would then wrongly yield zero rows). */
+  private[graft] def groupPass(df: DataFrame, keys: List[String],
+                               aggCols: Seq[Column]): DataFrame =
+    if (aggCols.nonEmpty)
+      df.groupBy(keys.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
+    else if (keys.isEmpty) df.sparkSession.range(1).select()
+    else df.select(keys.map(col): _*).dropDuplicates()
+
+  /** DISTINCT SUM/AVG side pass: aggregate the already-deduplicated
+    * `(keys, value)` stream NON-distinct through [[aggAccumulator]] as
+    * column `name` — constant memory per group, where a collect_set of
+    * the distinct terms would be unbounded — and join it back onto the
+    * main pass's `grouped` on the keys, null-safe (an optional group key
+    * can be unbound). */
+  private[graft] def joinSidePass(grouped: DataFrame, deduped: DataFrame,
+                                  value: Column, keys: List[String],
+                                  name: String, a: AggE): DataFrame = {
+    val side = deduped.groupBy(keys.map(col): _*)
+      .agg(aggAccumulator(Some(value), Nil, a.copy(distinct = false)).as(name))
+    if (keys.isEmpty) grouped.crossJoin(side)
+    else {
+      val renamed = keys.foldLeft(side)((d, k) =>
+        d.withColumnRenamed(k, s"__k_$k"))
+      val cond = keys.map(k => grouped(k) <=> renamed(s"__k_$k")).reduce(_ && _)
+      grouped.join(renamed, cond, "inner")
+        .drop(keys.map(k => s"__k_$k"): _*)
+    }
+  }
+
+  /** Every node (subject ∪ object) of an already graph-scoped quads
+    * frame, as column `node` — the zero-length path domain — next to the
+    * graph column `gCol()` builds when the path runs under GRAPH ?g
+    * (a function, so each end's projection gets its own alias). */
+  private[graft] def graphNodes(scoped: DataFrame,
+                                gCol: Option[() => Column]): DataFrame = {
+    def ends(pos: String) =
+      scoped.select(col(pos).as("node") +: gCol.map(_()).toSeq: _*)
+    ends("s").union(ends("o")).dropDuplicates()
+  }
+
+  /** Zero-length path with a constant end: one row per graph context —
+    * one, or one per named graph under GRAPH ?g, which `namedGraphs(gv)`
+    * supplies as column `gv` — binding the variable end to the
+    * constant's term struct. The binding comes from the LITERAL: a
+    * zero-length path binds a constant to itself even when the term is
+    * absent from the data, and so from a dictionary. Both ends
+    * constant: those rows iff the terms are equal. */
+  private[graft] def zeroLengthConst(spark: SparkSession, s: VarOrTerm,
+                                     o: VarOrTerm, g: GraphSpec,
+                                     namedGraphs: String => DataFrame): DataFrame = {
+    val ec = new ExprCompiler(_ => nullTerm)
+    def constRows(cols: (String, Column)*): DataFrame = g match {
+      case GraphVar(n) =>
+        namedGraphs(n).select(col(n) +: cols.map { case (a, c) => c.as(a) }: _*)
+      case _ =>
+        spark.range(1).select(cols.map { case (a, c) => c.as(a) }: _*)
+    }
+    (s, o) match {
+      case (T(ts), T(to)) =>
+        if (ts == to) constRows() else spark.range(0).select()
+      case (V(sv), T(t)) => constRows(sv -> ec.termCol(t))
+      case (T(t), V(ov)) => constRows(ov -> ec.termCol(t))
+      case _ => throw new IllegalStateException(
+        s"zero-length path without a constant end: $s $o")
+    }
   }
 
   /** ASK: one row, one boolean column `ask` — lazily planned (the
@@ -636,13 +722,7 @@ final class Compiler(quads: DataFrame) {
         assuredVars(l), assuredVars(r2), "left_outer",
         scalarCs.reduceOption((a, b) => FuncE("&&", List(a, b))))
 
-    case Union(l, r) =>
-      val (ld, rd) = (compileV(l), compileV(r))
-      val allCols = (ld.columns ++ rd.columns).distinct.toIndexedSeq
-      def pad(df: DataFrame) =
-        df.select(allCols.map(c =>
-          (if (df.columns.contains(c)) df(c) else nullTerm).as(c)): _*)
-      pad(ld).unionByName(pad(rd))
+    case Union(l, r) => Compiler.unionPadded(compileV(l), compileV(r), nullTerm)
 
     case Minus(l, r) => compileMinus(l, r)
 
@@ -828,15 +908,6 @@ final class Compiler(quads: DataFrame) {
   }
 
   // ----- FILTER (incl. EXISTS / NOT EXISTS lowering) -----
-  /** `!EXISTS{..}` ≡ `NOT EXISTS{..}` (and `!NOT EXISTS` ≡ EXISTS). */
-  private def normalizeNotExists(e: Expr): Expr = e match {
-    case FuncE("!", List(inner)) => normalizeNotExists(inner) match {
-      case ExistsE(p, n) => ExistsE(p, !n)
-      case other => FuncE("!", List(other))
-    }
-    case other => other
-  }
-
   private def compileFilter(child: Op, cond: Expr): DataFrame = {
     val (existsConjs, scalarConjs) =
       conjuncts(cond).map(normalizeNotExists).partition {
@@ -977,43 +1048,20 @@ final class Compiler(quads: DataFrame) {
       Compiler.aggFinish(col(s"__agg_$name"), a)
 
     // DISTINCT SUM/AVG: dedup (keys, term) FIRST, then aggregate the
-    // deduped stream non-distinct — constant memory per group, where a
-    // collect_set of all distinct terms would be unbounded. Costs one
-    // extra shuffle + key join per such aggregate (they are rare).
+    // deduped stream non-distinct in a side pass. Costs one extra
+    // shuffle + key join per such aggregate (they are rare).
     val (distSumAvg, mainAggs) = aggs.partition { case (_, a) =>
       a.distinct && (a.func == "SUM" || a.func == "AVG")
     }
 
-    val mainCols = mainAggs.map { case (n, a) => aggStruct(a).as(s"__agg_$n") }
-    var grouped =
-      if (mainCols.isEmpty) {
-        if (keys.isEmpty)
-          // ungrouped query whose aggregates ALL went to the side path
-          // (e.g. only SUM DISTINCT): SPARQL still returns exactly one
-          // solution even over an empty match, so seed one literal row
-          // (df.select().dropDuplicates() would be empty → the join
-          // below would wrongly yield zero rows)
-          df.sparkSession.range(1).select()
-        else df.select(keys.map(col): _*).dropDuplicates()
-      }
-      else df.groupBy(keys.map(col): _*).agg(mainCols.head, mainCols.tail: _*)
-
+    var grouped = Compiler.groupPass(df, keys,
+      mainAggs.map { case (n, a) => aggStruct(a).as(s"__agg_$n") })
     distSumAvg.foreach { case (n, a) =>
       val deduped = df
         .select(keys.map(col) :+ ec.value(a.expr.get).as("__v"): _*)
         .dropDuplicates()
-      val side = deduped.groupBy(keys.map(col): _*).agg(
-        Compiler.aggAccumulator(Some(deduped("__v")), Nil,
-          a.copy(distinct = false)).as(s"__agg_$n"))
-      grouped =
-        if (keys.isEmpty) grouped.crossJoin(side)
-        else {
-          val renamed = keys.foldLeft(side)((d, k) =>
-            d.withColumnRenamed(k, s"__k_$k"))
-          val cond = keys.map(k => grouped(k) <=> renamed(s"__k_$k")).reduce(_ && _)
-          grouped.join(renamed, cond, "inner")
-            .drop(keys.map(k => s"__k_$k"): _*)
-        }
+      grouped = Compiler.joinSidePass(grouped, deduped, deduped("__v"), keys,
+        s"__agg_$n", a)
     }
 
     if (aggs.isEmpty) grouped
@@ -1032,16 +1080,10 @@ final class Compiler(quads: DataFrame) {
       case GraphTerm(t) => quads.filter(quads("g") === ec.termCol(t))
       case GraphVar(_) => quads.filter(quads("g").isNotNull)
     }
-    g match {
-      case GraphVar(n) =>
-        scoped.select(col("s").as("node"), col("g").as(n))
-          .union(scoped.select(col("o").as("node"), col("g").as(n)))
-          .dropDuplicates()
-      case _ =>
-        scoped.select(col("s").as("node"))
-          .union(scoped.select(col("o").as("node")))
-          .dropDuplicates()
-    }
+    Compiler.graphNodes(scoped, g match {
+      case GraphVar(n) => Some(() => col("g").as(n))
+      case _ => None
+    })
   }
 
   /** Distinct named-graph IRIs (for binding GRAPH ?g in bound-end
@@ -1049,26 +1091,15 @@ final class Compiler(quads: DataFrame) {
   private def namedGraphs(gv: String): DataFrame =
     quads.filter(quads("g").isNotNull).select(col("g").as(gv)).dropDuplicates()
 
-  private def compileZeroLength(s: VarOrTerm, o: VarOrTerm, g: GraphSpec): DataFrame = {
-    val ec = exprs(quads)
-    def constRows(cols: (String, Column)*): DataFrame = g match {
-      case GraphVar(n) =>
-        namedGraphs(n).select(col(n) +: cols.map { case (a, c) => c.as(a) }: _*)
-      case _ =>
-        spark.range(1).select(cols.map { case (a, c) => c.as(a) }: _*)
-    }
-    (s, o) match {
-      case (T(ts), T(to)) =>
-        if (ts == to) constRows() else spark.range(0).select()
-      case (V(sv), T(t)) => constRows(sv -> ec.termCol(t))
-      case (T(t), V(ov)) => constRows(ov -> ec.termCol(t))
-      case (V(sv), V(ov)) if sv == ov =>
-        graphNodes(g).withColumnRenamed("node", sv)
-      case (V(sv), V(ov)) =>
-        val n = graphNodes(g)
-        n.select((col("node").as(sv) +: col("node").as(ov) +:
-          n.columns.filter(_ != "node").map(col).toSeq): _*)
-    }
+  private def compileZeroLength(s: VarOrTerm, o: VarOrTerm,
+                                g: GraphSpec): DataFrame = (s, o) match {
+    case (V(sv), V(ov)) if sv == ov =>
+      graphNodes(g).withColumnRenamed("node", sv)
+    case (V(sv), V(ov)) =>
+      val n = graphNodes(g)
+      n.select((col("node").as(sv) +: col("node").as(ov) +:
+        n.columns.filter(_ != "node").map(col).toSeq): _*)
+    case _ => Compiler.zeroLengthConst(spark, s, o, g, namedGraphs)
   }
 
   /** Transitive closure by semi-naive iteration — the driver-side loop
@@ -1090,10 +1121,7 @@ final class Compiler(quads: DataFrame) {
       GraftColumnBridge.freshLeaf(df.localCheckpoint(eager = false))
     // Within GRAPH ?g, the closure must stay INSIDE one named graph:
     // the graph column rides the edge set and joins round-to-round.
-    val gVar: Option[String] = alp.g match {
-      case GraphVar(n) => Some(n)
-      case _ => None
-    }
+    val gVar = graphVar(alp.g)
     val gSel = gVar.map(n => col(n).as("g")).toSeq
     val gKey = gVar.map(_ => "g").toSeq
     val edges = materialize(

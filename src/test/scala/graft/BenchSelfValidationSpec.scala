@@ -89,16 +89,20 @@ class BenchSelfValidationSpec extends AnyFlatSpec with Matchers {
     // four-digit totals, five-digit CPU seconds
     val medians = (1 to 179).map(i => f"q_entry_$i%03d" -> (0.5 + i * 0.37))
     val total = medians.map(_._2).sum
-    val line = Bench.stdoutLine(total, total * 0.9, "[]", 12,
-      Bench.noiseJson(0.412, 0.398, 4321.987, 98765.432),
-      "/root/testdata/sf10x")
-    line.getBytes(java.nio.charset.StandardCharsets.UTF_8).length should be <= 300
-    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
-    json.get("metric").asText() shouldBe "total"
-    json.get("value").asDouble() shouldBe total +- 0.001
-    json.get("remeasured_n").asInt() shouldBe 12
-    json.get("failed").isArray shouldBe true
-    json.has("queries") shouldBe false
+    // no failure, and every entry failed (the whole list was ~2.3 KB)
+    for (failed <- Seq(Nil, medians.map(_._1))) withClue(s"${failed.size} failed: ") {
+      val line = Bench.stdoutLine(total, total * 0.9, failed, 12,
+        Bench.noiseJson(0.412, 0.398, 4321.987, 98765.432),
+        "/srv/graft/data/sf10x")
+      line.getBytes(java.nio.charset.StandardCharsets.UTF_8).length should be <= 300
+      val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+      json.get("metric").asText() shouldBe "total"
+      json.get("value").asDouble() shouldBe total +- 0.001
+      json.get("remeasured_n").asInt() shouldBe 12
+      json.get("failed").isArray shouldBe true
+      json.has("queries") shouldBe false
+      json.get("failed_n").asInt() shouldBe failed.size
+    }
   }
 
   behavior of "Bench strict gate"

@@ -38,12 +38,18 @@ class DevSpec extends AnyFlatSpec with Matchers {
       withClue(args) { rejected(Verify.parseArgs(args)) should startWith("usage: graft.Verify") }
     rejected(Verify.parseArgs(Seq("sf", "out", "q_no_such_entry"))) should
       include("unknown battery entries: q_no_such_entry")
+    rejected(Verify.parseSweepArgs(Seq("sf", "out", "r.json", "q_no_such_entry"))) should
+      (include("unknown battery entries: q_no_such_entry") and
+        include("usage: graft.VerifyAtSf"))
   }
 
   it should "read the whole battery or an entry subset" in {
     Verify.parseArgs(Seq("sf", "out")) shouldBe Right(("sf", "out", None))
     Verify.parseArgs(Seq("sf", "out", "q_optional", "q_dict_bucketed")) shouldBe
       Right(("sf", "out", Some(Set("q_optional", "q_dict_bucketed"))))
+    Verify.parseSweepArgs(Seq("sf", "out")) shouldBe Right(None)
+    Verify.parseSweepArgs(Seq("sf", "out", "r.json", "q_optional")) shouldBe
+      Right(Some(Set("q_optional")))
   }
 
   "LocalSession" should "hold the only SparkSession builder in src/main" in {

@@ -3,7 +3,8 @@ package graft
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
-/** Regressions for the two round-17 ADVICE items.
+/** Regression for a round-17 ADVICE item (the other one, AnnRecall's
+  * query-id selection, is pinned in [[AnnRecallSpec]]).
   *
   *  1. Round17AdviceSpec's interpreted-path test mutated (and mis-
   *     restored) codegen confs on the SHARED TestSpark session —
@@ -12,16 +13,9 @@ import org.scalatest.matchers.should.Matchers
   *     running the interpreted arm on `spark.newSession()`. Pinned
   *     here: child-session conf mutations do not leak to the parent
   *     (the isolation mechanism the fix relies on).
-  *  2. AnnRecall.plantedCorpus drew query ids via `(i*17) % (maxId+1)`,
-  *     which silently under-selects (or zero-selects) on sparse /
-  *     offset id spaces. Fixed: even stride over the sorted ACTUAL id
-  *     set + a clear require on emptiness + realized count in the
-  *     JSON. Pinned here on a sparse 3-id space and an offset dense
-  *     space where the old formula found zero ids.
   */
 class Round18AdviceSpec extends AnyFlatSpec with Matchers {
   private val spark = TestSpark.spark
-  import spark.implicits._
 
   behavior of "child-session conf isolation (advice #1)"
 
@@ -34,59 +28,5 @@ class Round18AdviceSpec extends AnyFlatSpec with Matchers {
     iso.conf.get("spark.sql.codegen.wholeStage") shouldBe "false"
     spark.conf.getOption("spark.sql.codegen.wholeStage") shouldBe before
     spark.conf.getOption("spark.sql.codegen.factoryMode") shouldBe beforeFm
-  }
-
-  behavior of "AnnRecall query-id selection (advice #2)"
-
-  private def embDf(ids: Seq[Long]) = {
-    val rnd = new scala.util.Random(1335L)
-    ids.map(id => (id, Seq.fill(8)(rnd.nextFloat())))
-      .toDF("vec_id", "embedding")
-  }
-
-  it should "realize the requested query count on a sparse id space" in {
-    // ids nowhere near [0, n) — the old modular formula would have
-    // selected ids 0,17,34,... and matched nothing
-    val emb = embDf(Seq(7L, 5000L, 123456L))
-    val (_, queries) = AnnRecall.plantedCorpus(spark, emb,
-      numQueries = 2, planted = 1, seed = 1L)
-    queries.size shouldBe 2
-    queries.map(_._1).toSet.subsetOf(Set(7L, 5000L, 123456L)) shouldBe true
-  }
-
-  it should "realize queries on an offset dense id space" in {
-    val emb = embDf((1000000L until 1000040L))
-    val (_, queries) = AnnRecall.plantedCorpus(spark, emb,
-      numQueries = 5, planted = 1, seed = 1L)
-    queries.size shouldBe 5
-    queries.map(_._1).foreach(id => id should be >= 1000000L)
-  }
-
-  it should "cap at the corpus size when fewer ids than requested" in {
-    val emb = embDf(Seq(3L, 9L))
-    val (_, queries) = AnnRecall.plantedCorpus(spark, emb,
-      numQueries = 20, planted = 1, seed = 1L)
-    queries.map(_._1).toSet shouldBe Set(3L, 9L)
-  }
-
-  it should "fail with a clear message on an empty embeddings table" in {
-    val emb = embDf(Nil)
-    val ex = intercept[IllegalArgumentException] {
-      AnnRecall.plantedCorpus(spark, emb, numQueries = 2, planted = 1,
-        seed = 1L)
-    }
-    ex.getMessage should include("no rows with non-null vectors")
-  }
-
-  it should "plant copies with ids above the corpus max" in {
-    val emb = embDf(Seq(7L, 5000L))
-    val (corpus, queries) = AnnRecall.plantedCorpus(spark, emb,
-      numQueries = 2, planted = 3, seed = 1L)
-    corpus.count() shouldBe (2 + 2 * 3)
-    val planted = corpus.filter($"vec_id" > 5000L)
-      .select("vec_id").as[Long].collect()
-    planted should have length (2 * 3)
-    planted.foreach(_ should be > 5000L)
-    queries.size shouldBe 2
   }
 }
