@@ -18,10 +18,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    planning, via `executedPlan`), the noop-sink EXECUTION of a
   *    pre-planned frame, and the FULL run, reported as medians — so
   *    optimization effort lands on the part that costs. Bench's
-  *    calibration probe runs before and after the timed passes (quiet
-  *    host ~0.10 s), after the warm-up as in Bench, so an isolated
-  *    re-timing carries its own validity evidence against shared-host
-  *    contention.
+  *    calibration probe runs before and after the timed passes, after
+  *    the warm-up as in Bench, so an isolated re-timing carries its
+  *    own validity evidence against shared-host contention.
   *  - `plan`: the formatted physical plan, printed, or with `--out`
   *    written to `<dir>/<entry>_<suffix>.txt` (the before/after plan
   *    evidence under plans/).
@@ -94,7 +93,7 @@ object Dev {
     def median3(pass: => Double): Double = Bench.medianOf((1 to 3).map(_ => pass))
     def run(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
     names.foreach(name => run(frame(name))) // untimed warm-up
-    println(f"calib_before: ${Bench.calibrate(spark)}%.3f s (quiet host ~0.10)")
+    println(f"calib_before: ${Bench.calibrate(spark)}%.3f s")
     names.foreach { name =>
       val plan = median3(secs(frame(name).queryExecution.executedPlan))
       val exec = median3 {
@@ -105,7 +104,7 @@ object Dev {
       val full = median3(secs(run(frame(name))))
       println(f"$name%-28s plan=$plan%.3f exec=$exec%.3f full=$full%.3f")
     }
-    println(f"calib_after: ${Bench.calibrate(spark)}%.3f s (quiet host ~0.10)")
+    println(f"calib_after: ${Bench.calibrate(spark)}%.3f s")
   }
 
   private def finalPlans(spark: SparkSession, names: Seq[String],

@@ -1,7 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.parquet.hadoop.ParquetOutputFormat
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Data-layout operators: how rows are ARRANGED in files, the lever
   * that decides how much of 100 TB a selective query touches. Content
@@ -100,6 +102,46 @@ object Layout {
   private[io] def fileCount(bytes: BigInt, targetFileBytes: Long,
                             maxFiles: Int = Int.MaxValue): Int =
     ((bytes + targetFileBytes - 1) / targetFileBytes).max(1).min(maxFiles).toInt
+
+  /** The one writer of every quad-store file: [[QuadsIO.writeParquet]]
+    * and [[QuadsIO.writeBucketedTable]] for the term-struct store, and
+    * every [[DictStore]] write (dictionary, encoded quads, bucketed
+    * tables, appends, compaction), with [[storeOptions]]. */
+  private[io] def storeWriter(df: DataFrame, mode: SaveMode): DataFrameWriter[Row] =
+    df.write.mode(mode).options(storeOptions(df.schema))
+
+  /** zstd over Parquet v2 data pages, with dictionary pages on the
+    * string leaves only:
+    *  - integer leaves (the dict store's ids, sorted along (p, s) or
+    *    by lex; term kinds and sidecar classes) are DELTA_BINARY_PACKED,
+    *    small deltas where a dictionary stored an index per row;
+    *  - string leaves keep a dictionary while it pays. Past that (the
+    *    dictionary's `lex` unique by construction, or a chunk whose
+    *    dictionary outgrows its page) v2 falls back to DELTA_BYTE_ARRAY
+    *    (prefix-shared along the sort) where v1 fell back to PLAIN.
+    *    Reading dictionary-encoded strings is what keeps term-struct
+    *    scans as cheap as before: the same store with no string
+    *    dictionaries was a third smaller but took 1.7x the query CPU.
+    * Constants, not settings. Spark lowercases option keys, which the
+    * per-leaf keys survive because every store column name is lower
+    * case. A catalog table re-attached over store files must declare
+    * these options too: Spark's append into an existing table takes
+    * the table's options, not the writer's. Spark's parquet reader
+    * decodes both page versions, so stores written with v1 pages load,
+    * append and compact unchanged (a directory may mix the two). */
+  private[io] def storeOptions(schema: StructType): Map[String, String] = {
+    def strings(t: StructType, prefix: String): Seq[String] = t.fields.toSeq.flatMap { f =>
+      f.dataType match {
+        case st: StructType => strings(st, s"$prefix${f.name}.")
+        case StringType => Seq(prefix + f.name)
+        case _ => Nil
+      }
+    }
+    Map("compression" -> "zstd",
+      ParquetOutputFormat.WRITER_VERSION -> "v2",
+      ParquetOutputFormat.ENABLE_DICTIONARY -> "false") ++
+      strings(schema, "").map(c => s"${ParquetOutputFormat.ENABLE_DICTIONARY}#$c" -> "true")
+  }
 
   /** Bin-pack a parquet directory into ~`targetFileBytes` files — the
     * small-file compaction every long-lived table needs (streaming

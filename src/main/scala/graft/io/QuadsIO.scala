@@ -231,18 +231,16 @@ object QuadsIO {
 
   /** Canonical storage: Parquet, repartitioned by predicate then subject
     * so same-predicate scans touch few files (vertical-partitioning-lite)
-    * and same-subject stars co-locate within row groups. zstd by
-    * default: RDF term columns are highly repetitive (shared IRI
-    * prefixes, low-cardinality predicates/datatypes), where zstd beats
-    * snappy ~1.5× on size at comparable scan speed — at 100 TB that is
-    * the scan-IO bottleneck, not CPU. */
-  def writeParquet(quads: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite,
-                   compression: String = "zstd"): Unit =
-    quads
+    * and same-subject stars co-locate within row groups. Written
+    * through the one store writer ([[Layout.storeWriter]]): the term
+    * strings are highly repetitive (shared IRI prefixes, low-cardinality
+    * predicates/datatypes), so they keep small dictionaries or, past
+    * those, share prefixes along the sort. */
+  def writeParquet(quads: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite): Unit =
+    Layout.storeWriter(quads
       .repartition(quads.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt,
         quads("p"), quads("s"))
-      .sortWithinPartitions("p", "s")
-      .write.mode(mode).option("compression", compression).parquet(path)
+      .sortWithinPartitions("p", "s"), mode).parquet(path)
 
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
@@ -294,7 +292,7 @@ object QuadsIO {
     * (Bucketing requires the table catalog, hence saveAsTable.) */
   def writeBucketedTable(quads: DataFrame, table: String,
                          buckets: Int = 64): Unit =
-    quads.write.mode(SaveMode.Overwrite)
+    Layout.storeWriter(quads, SaveMode.Overwrite)
       .format("parquet")
       .bucketBy(buckets, "s")
       .sortBy("s")

@@ -71,6 +71,13 @@ class AnnRecallSpec extends AnyFlatSpec with Matchers {
     corpus.unpersist()
   }
 
+  it should "reject numQueries = 0 in AnnRecall.plantedCorpus" in {
+    val emb = embDf(0L until 10L)
+    an[IllegalArgumentException] should be thrownBy
+      AnnRecall.plantedCorpus(spark, emb, numQueries = 0, planted = 1,
+        seed = 1L)
+  }
+
   // AnnRecall.plantedCorpus once drew query ids via `(i*17) % (maxId+1)`,
   // which silently under-selects (or zero-selects) on sparse / offset
   // id spaces. It now strides evenly over the sorted ACTUAL id set,

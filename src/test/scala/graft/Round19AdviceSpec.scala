@@ -3,101 +3,20 @@ package graft
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
-/** Regressions for the round-18 ADVICE items.
+/** Regression for the round-18 ADVICE item on the portable minhash
+  * oracle: `portableMinHashOracle` duplicated the CTE body of
+  * `portableMinHashCtes` — two copies of the portable hash-family SQL
+  * that could silently diverge. Fixed: the all-pairs oracle is now
+  * built on the shared helper; pinned here by checking the all-pairs
+  * and incremental oracles share a byte-identical CTE prefix through
+  * the `bands` CTE.
   *
-  *  1. `AnnRecall.plantedCorpus` / `SemanticDrift.measure` divided by
-  *     the caller-supplied query/pair count — numQueries=0 (CLI-
-  *     reachable via args) threw ArithmeticException. Fixed: explicit
-  *     `require(... > 0)` in both, pinned here.
-  *  2. The stride selection `allIds.indices.by(stride).take(n)` never
-  *     sampled the tail of the id range when `len % n != 0` (1000 ids
-  *     / 400 queries stopped at index 798). Fixed: proportional index
-  *     mapping `i -> i * len / n` in [[QuerySelect.proportionalPick]],
-  *     pinned on exactly that 1000/400 shape.
-  *  3. `portableMinHashOracle` duplicated the CTE body of
-  *     `portableMinHashCtes` — two copies of the portable hash-family
-  *     SQL that could silently diverge. Fixed: the all-pairs oracle is
-  *     now built on the shared helper; pinned here by checking the
-  *     all-pairs and incremental oracles share a byte-identical CTE
-  *     prefix through the `bands` CTE.
-  *  4. (SemanticDriftSpec conf hygiene — the pinned floors now train
-  *     on a single coalesced partition so float reduction order is
-  *     fixed; the change is in that spec itself.)
-  *
-  * Also pins the round-19 scale-safe selection
-  * ([[QuerySelect.sampledSortedIds]]): full id set under the cap, a
-  * deterministic bounded subset above it.
+  * The round's other cases live with the operators they guard:
+  * [[AnnRecallSpec]] and [[SemanticDriftSpec]] (non-positive
+  * query/pair counts) and [[QuerySelectSpec]] (proportional and
+  * bounded id selection).
   */
 class Round19AdviceSpec extends AnyFlatSpec with Matchers {
-  private val spark = TestSpark.spark
-  import spark.implicits._
-
-  private def embDf(ids: Seq[Long]) = {
-    val rnd = new scala.util.Random(1336L)
-    ids.map(id => (id, Seq.fill(8)(rnd.nextFloat())))
-      .toDF("vec_id", "embedding")
-  }
-
-  behavior of "non-positive query/pair counts (advice #1)"
-
-  it should "reject numQueries = 0 in AnnRecall.plantedCorpus" in {
-    val emb = embDf(0L until 10L)
-    an[IllegalArgumentException] should be thrownBy
-      AnnRecall.plantedCorpus(spark, emb, numQueries = 0, planted = 1,
-        seed = 1L)
-  }
-
-  it should "reject numPairs = 0 in SemanticDrift.measure" in {
-    val emb = embDf(0L until 10L)
-    an[IllegalArgumentException] should be thrownBy
-      SemanticDrift.measure(spark, emb, numPairs = 0, seed = 1L,
-        deltas = Seq(0.0), k = 2, iters = 1)
-  }
-
-  behavior of "proportional query selection (advice #2)"
-
-  it should "sample the tail of a non-multiple id range" in {
-    // the advice's exact shape: 1000 ids, 400 picks — the old stride
-    // selection stopped at index 798, never touching ids 800..999
-    val ids = (0L until 1000L).toArray
-    val picks = QuerySelect.proportionalPick(ids, 400)
-    picks.size shouldBe 400
-    picks.distinct.size shouldBe 400
-    picks.max should be >= 990L
-    picks.min shouldBe 0L
-  }
-
-  it should "return all ids when n >= len and reject n = 0" in {
-    val ids = (10L until 15L).toArray
-    QuerySelect.proportionalPick(ids, 9) shouldBe ids.toSeq
-    an[IllegalArgumentException] should be thrownBy
-      QuerySelect.proportionalPick(ids, 0)
-  }
-
-  behavior of "bounded id sampling (round-19 scale-safe selection)"
-
-  it should "return the exact full sorted id set under the cap" in {
-    val emb = embDf(Seq(42L, 7L, 99L, 13L))
-    QuerySelect.sampledSortedIds(emb, "vec_id", seed = 5L).toSeq shouldBe
-      Seq(7L, 13L, 42L, 99L)
-  }
-
-  it should "return a deterministic bounded sorted subset above the cap" in {
-    val emb = embDf(0L until 4000L)
-    emb.cache()
-    val a = QuerySelect.sampledSortedIds(emb, "vec_id", seed = 5L,
-      capRows = 500L)
-    val b = QuerySelect.sampledSortedIds(emb, "vec_id", seed = 5L,
-      capRows = 500L)
-    a.toSeq shouldBe b.toSeq // pure function of (seed, id set)
-    a.length should be < 2000 // bounded well below the corpus
-    a.length should be > 100 // but a real sample, not a sliver
-    a.toSeq shouldBe a.sorted.toSeq
-    val c = QuerySelect.sampledSortedIds(emb, "vec_id", seed = 6L,
-      capRows = 500L)
-    c.toSeq should not be a.toSeq // seed moves the draw
-    emb.unpersist()
-  }
 
   behavior of "portable minhash oracle DRY (advice #5)"
 

@@ -15,6 +15,7 @@ import org.scalatest.matchers.should.Matchers
   * operator's re-train signal, not a correctness property). */
 class SemanticDriftSpec extends AnyFlatSpec with Matchers {
   private val spark = TestSpark.spark
+  import spark.implicits._
 
   it should "recover planted twins at zero drift and keep twin recall under heavy drift" in {
     val seed = java.lang.Long.getLong("graft.fuzz.seed", 1335L)
@@ -75,5 +76,14 @@ class SemanticDriftSpec extends AnyFlatSpec with Matchers {
       high.recallBase should be >= 0.5
       high.recallBase should be > high.recallMode
     }
+  }
+
+  it should "reject numPairs = 0 in SemanticDrift.measure" in {
+    val rnd = new scala.util.Random(1336L)
+    val emb = (0L until 10L).map(id => (id, Seq.fill(8)(rnd.nextFloat())))
+      .toDF("vec_id", "embedding")
+    an[IllegalArgumentException] should be thrownBy
+      SemanticDrift.measure(spark, emb, numPairs = 0, seed = 1L,
+        deltas = Seq(0.0), k = 2, iters = 1)
   }
 }
