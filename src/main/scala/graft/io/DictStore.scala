@@ -84,10 +84,13 @@ import org.apache.spark.sql.types._
   * operator bodies built from the pieces above. Every algebra analysis
   * they use (`conjuncts`, `exprVars`, `assuredVars`,
   * `normalizeNotExists`) is [[Algebra]]'s, and every representation-
-  * blind operator tail (UNION padding, the aggregation pass with its
-  * DISTINCT SUM/AVG side pass and accumulators, the zero-length node
-  * domain and constant rows, the ALP closure) is `object Compiler`'s,
-  * the same code the term-struct compiler runs.
+  * blind operator tail is `object Compiler`'s, the same code the
+  * term-struct compiler runs: the one SPARQL-compatible join
+  * ([[Compiler.compatJoin]]) behind BGP joins, OPTIONAL, MINUS and
+  * [NOT] EXISTS, UNION padding, the aggregation pass with its DISTINCT
+  * SUM/AVG side pass and accumulators, the zero-length node domain and
+  * constant rows, and the ALP closure. An id-space join's condition
+  * reads the hybrid-decoded `__tv_` term columns.
   */
 final class DictStore private (val spark: SparkSession,
                                val dict: DataFrame,
@@ -342,7 +345,8 @@ final class DictStore private (val spark: SparkSession,
     // row's value IS the right row's value), and ANY other scalar
     // conjunct without a nested EXISTS evaluates on the merged row
     // during the join through hybrid-decoded term columns — the same
-    // ExprCompiler.bool the standard compiler's joinCompat uses
+    // Compiler.compatJoin and ExprCompiler.bool the standard compiler
+    // uses
     case LeftJoin(l, r, Some(cond)) =>
       isExtSpine(l, r) && conjuncts(cond).map(normalizeNotExists).forall(e =>
         (idPred(r, e) && exprVars(e).subsetOf(Algebra.vars(r))) ||
@@ -601,7 +605,8 @@ final class DictStore private (val spark: SparkSession,
           case _ => None
         }
         scanIds(sc, consts, tvO, tvS)
-      }.reduceLeft(naturalJoin)
+      }.reduceLeft(Compiler.compatJoin(_, _, assuredVars(b), assuredVars(b),
+        "inner")(_ => None))
     case LeftJoin(l, r, cond) =>
       // right-only conditions pre-filter the right side BEFORE the
       // join (equivalent because they reference no left var: matched
@@ -630,45 +635,27 @@ final class DictStore private (val spark: SparkSession,
       if (typedPreVars.nonEmpty)
         rd = rd.drop(typedPreVars.flatMap(v =>
           Seq(tcCol(v), tdCol(v), teCol(v), ttCol(v))): _*)
-      val shared = ld.columns.intersect(rd.columns).toSeq
-      if (mergedConjs.isEmpty) ld.join(rd, shared, "left_outer")
-      else {
-        // hybrid decode on the owning side: shared vars read the left
-        // copy (join equality makes the sides agree on matched rows),
-        // right-only vars the right copy — the merged-row resolver of
-        // the standard compiler's joinCompat, restricted to the vars
-        // the condition actually references
-        val condVars = mergedConjs.flatMap(exprVars).distinct
-        val lNullable = Algebra.vars(l) -- assuredVars(l)
-        val ldD = decodeVars(ld,
-          condVars.filter(ld.columns.contains), lNullable)
-        val rdD = decodeVars(rd,
-          condVars.filter(v => !ld.columns.contains(v) &&
-            rd.columns.contains(v)), Set.empty) // right is a BGP: assured
-        val rename = shared.map(v => v -> s"__rj_$v").toMap
-        val rdR = rename.foldLeft(rdD) { case (d, (v, rv)) =>
-          d.withColumnRenamed(v, rv) }
-        val keyConds = shared.map(v => ldD(v) === rdR(rename(v)))
-        val ec = new ExprCompiler(n =>
-          if (ldD.columns.contains(tvCol(n))) ldD(tvCol(n))
-          else if (rdR.columns.contains(tvCol(n))) rdR(tvCol(n))
-          else graft.sparql.TermFns.nullTerm)
-        val joinCond = (keyConds :+ mergedConjs.map(ec.bool).reduce(_ && _))
-          .reduce(_ && _)
-        val outCols = (ld.columns ++ rd.columns).distinct.toIndexedSeq
-        ldD.join(rdR, joinCond, "left_outer")
-          .select(outCols.map(v =>
-            (if (ld.columns.contains(v)) ldD(v) else rdR(v)).as(v)): _*)
-      }
+      // hybrid decode on the owning side: shared vars read the left
+      // copy (join equality makes the sides agree on matched rows),
+      // right-only vars the right copy, restricted to the vars the
+      // condition actually references
+      val condVars = mergedConjs.flatMap(exprVars).distinct
+      val ldD = decodeVars(ld, condVars.filter(ld.columns.contains),
+        Algebra.vars(l) -- assuredVars(l))
+      val rdD = decodeVars(rd, condVars.filter(v => !ld.columns.contains(v) &&
+        rd.columns.contains(v)), Set.empty) // right is a BGP: assured
+      Compiler.compatJoin(ldD, rdD, assuredVars(l), assuredVars(r),
+        "left_outer")(s => tvCond(mergedConjs, s))
+        .drop(condVars.map(tvCol): _*)
     case Minus(l, r) =>
-      val (ld, rd) = (idsOf(l, consts), idsOf(r, consts))
-      val shared = ld.columns.intersect(rd.columns).toSeq
-      ld.join(rd.select(shared.map(col): _*), shared, "left_anti")
+      Compiler.minus(idsOf(l, consts), idsOf(r, consts), assuredVars(l),
+        assuredVars(r))
     case Union(l, r) => // absent vars pad as NULL ids
       Compiler.unionPadded(idsOf(l, consts), idsOf(r, consts),
         lit(null).cast(LongType))
     case Join(l, r) => // mixed join above unions/optionals (guarded assured)
-      naturalJoin(idsOf(l, consts), idsOf(r, consts))
+      Compiler.compatJoin(idsOf(l, consts), idsOf(r, consts), assuredVars(l),
+        assuredVars(r), "inner")(_ => None)
     case Values(vs, rows) => // probe list as a local long relation
       val schema = StructType(vs.map(StructField(_, LongType, nullable = false)))
       val data = new java.util.ArrayList[org.apache.spark.sql.Row]()
@@ -678,14 +665,6 @@ final class DictStore private (val spark: SparkSession,
       }
       spark.createDataFrame(data, schema)
     case other => throw new IllegalStateException(s"not an ext block: $other")
-  }
-
-  /** Join two id frames on all their shared columns — plain long
-    * equality, since every shared var is assured on both sides — or
-    * cross join them when they share none. */
-  private def naturalJoin(l: DataFrame, r: DataFrame): DataFrame = {
-    val shared = l.columns.intersect(r.columns).toSeq
-    if (shared.isEmpty) l.crossJoin(r) else l.join(r, shared)
   }
 
   // ----- id-space aggregation -----
@@ -1194,10 +1173,18 @@ final class DictStore private (val spark: SparkSession,
       if (df.columns.contains(tvCol(n))) col(tvCol(n))
       else graft.sparql.TermFns.nullTerm)
 
+  /** A [[Compiler.compatJoin]] condition: `conjs` over the `__tv_`
+    * decoded term columns of the merged row. */
+  private def tvCond(conjs: List[Expr], s: Compiler.JoinSides): Option[Column] = {
+    val ec = new ExprCompiler(n =>
+      s.merged(tvCol(n)).getOrElse(graft.sparql.TermFns.nullTerm))
+    conjs.map(ec.bool).reduceOption(_ && _)
+  }
+
   // ----- typed-sidecar FILTER fast path -----
   // Numeric/temporal comparisons of an object-position variable
   // against a CONSTANT evaluate on the sidecar columns persisted at
-  // encode (o_cls/o_dbl/o_dec/o_ts) — zero dict joins, and the
+  // encode (o_cls/o_dbl/o_num/o_ts) — zero dict joins, and the
   // resulting predicates are plain column comparisons Spark pushes
   // into the parquet scan. Boolean algebra is kept branch-equal to
   // TermMath.valueCmp/valueEq: exact-exact compares decimal(38,12),
@@ -1398,35 +1385,17 @@ final class DictStore private (val spark: SparkSession,
           pd = dec.filter(local.map(t => ec.bool(t._1)).reduce(_ && _))
             .drop(lv.map(tvCol): _*)
         }
-        if (corr.isEmpty) {
-          val shared = df.columns.intersect(pd.columns).toSeq
-          df = df.join(pd.select(shared.map(col): _*), shared,
-            if (negated) "left_anti" else "left_semi")
-        } else {
-          // correlated semi/anti join: long equality on the shared
-          // assured vars carries the join, the lifted conjuncts
-          // evaluate on hybrid-decoded term columns from BOTH frames
-          // (sub side wins name resolution, like the standard env)
-          val corrEs = corr.map(_._1)
-          val corrVars = corrEs.flatMap(exprVars).distinct
-          val subCorrVars = corrVars.filter(cleanedVars.contains)
-          val outerCorrVars = corrVars.filter(v =>
-            !cleanedVars.contains(v) && df.columns.contains(v))
-          val shared = df.columns.intersect(pd.columns).toSeq
-          val pdD = decodeVars(pd, subCorrVars, Set.empty)
-          val dfD = decodeVars(df, outerCorrVars, nullable)
-          val pdR = pdD.columns.foldLeft(pdD)((d, v) =>
-            d.withColumnRenamed(v, s"__ex_$v"))
-          val keyConds = shared.map(v => dfD(v) === pdR(s"__ex_$v"))
-          val ec = new ExprCompiler(n =>
-            if (pdD.columns.contains(tvCol(n))) pdR(s"__ex_${tvCol(n)}")
-            else if (dfD.columns.contains(tvCol(n))) dfD(tvCol(n))
-            else graft.sparql.TermFns.nullTerm)
-          val joinCond = (keyConds ++ corrEs.map(ec.bool)).reduce(_ && _)
-          df = dfD.join(pdR, joinCond,
-            if (negated) "left_anti" else "left_semi")
-            .drop(outerCorrVars.map(tvCol): _*)
-        }
+        // the lifted conjuncts evaluate on hybrid-decoded term columns
+        // from both frames (a var the block binds decodes there)
+        val corrEs = corr.map(_._1)
+        val corrVars = corrEs.flatMap(exprVars).distinct
+        val outerCorrVars = corrVars.filter(v =>
+          !cleanedVars.contains(v) && df.columns.contains(v))
+        df = Compiler.compatJoin(decodeVars(df, outerCorrVars, nullable),
+          decodeVars(pd, corrVars.filter(cleanedVars.contains), Set.empty),
+          assuredVars(child), assuredVars(cleaned),
+          if (negated) "left_anti" else "left_semi")(s => tvCond(corrEs, s))
+          .drop(outerCorrVars.map(tvCol): _*)
       case other => throw new IllegalStateException(s"not an EXISTS: $other")
     }
     df
@@ -1675,7 +1644,7 @@ object DictStore {
     * IRI/string object, so they RLE to near nothing and column
     * pruning skips them unless a filter references them. Stores
     * written before this sidecar existed load fine — the fast path
-    * just stays off ([[DictStore.hasTypedCols]]). */
+    * just stays off (the typed conjuncts take the hybrid decode). */
   private def encodeIds(quads: DataFrame, dict: DataFrame): DataFrame = {
     import graft.sparql.TermFns
     def d(i: Int) = dict.select(col("id").as(s"__ei$i"), col("term").as(s"__et$i"))

@@ -13,11 +13,13 @@ import org.apache.spark.sql.types._
   * hand-scheduled dataflow.
   *
   * Binding-set representation: one nullable term-struct column per
-  * variable; NULL = unbound (SURVEY.md §1.4). Join semantics follow
-  * SPARQL compatibility: variables assured-bound on both sides become
-  * hash-join keys; possibly-unbound shared variables get the
-  * compatible-bindings condition (NULL matches anything) — a strict
-  * superset of the reference, which only joins assured bindings
+  * variable; NULL = unbound (SURVEY.md §1.4). Join, OPTIONAL, MINUS
+  * and [NOT] EXISTS all lower to [[Compiler.compatJoin]], the one
+  * SPARQL-compatible join, which the dict store's id-space compiler
+  * calls too: variables assured-bound on both sides become hash-join
+  * keys; possibly-unbound shared variables get the compatible-bindings
+  * condition (NULL matches anything) — a strict superset of the
+  * reference, which only joins assured bindings
   * (Interpreter.scala:152-162).
   */
 object Compiler {
@@ -232,6 +234,73 @@ object Compiler {
   // ----- representation-blind operator tails -----
   // Shared by this compiler (term-struct columns) and the dict store's
   // id-space compiler (dictionary-id columns): neither reads a value.
+
+  /** A [[compatJoin]] condition's view of the two sides: a variable's
+    * column on the left frame, on the (renamed) right frame, or in the
+    * merged row — if any side has it. */
+  final class JoinSides private[Compiler] (val left: String => Option[Column],
+                                           val right: String => Option[Column],
+                                           assuredBoth: String => Boolean) {
+    /** The merged solution's binding: the left value when bound, else
+      * the right one (compatible sides agree wherever both are bound).
+      * A var assured on both sides is the left column itself, so the
+      * join's output partitioning survives the projection. */
+    def merged(v: String): Option[Column] = (left(v), right(v)) match {
+      case (Some(l), Some(r)) => Some(if (assuredBoth(v)) l else coalesce(l, r))
+      case (l, r) => l.orElse(r)
+    }
+  }
+
+  /** The one SPARQL-compatible join, for both term representations:
+    * Join, OPTIONAL, MINUS and [NOT] EXISTS of this compiler and of the
+    * dict store's id-space compiler all call it. The right side's
+    * shared columns are renamed; a shared var assured on both sides is
+    * a plain `===` key (an extractable equi key), any other shared var
+    * compatible-matches (`l.isNull || r.isNull || l === r` — NULL is
+    * unbound and matches anything). `cond` ANDs an extra condition
+    * built from the sides' resolvers. Inner and left-outer joins
+    * return the merged columns ([[JoinSides.merged]]: left columns,
+    * then the right-only ones); semi and anti joins the left columns. */
+  private[graft] def compatJoin(l: DataFrame, r: DataFrame,
+                                lAssured: Set[String], rAssured: Set[String],
+                                joinType: String)(
+                                 cond: JoinSides => Option[Column]): DataFrame = {
+    val (lCols, rCols) = (l.columns.toSeq, r.columns.toSeq)
+    val shared = lCols.filter(rCols.contains)
+    val rr = r.withColumnsRenamed(shared.map(v => v -> s"__r_$v").toMap)
+    def assuredBoth(v: String) = lAssured(v) && rAssured(v)
+    val sides = new JoinSides(
+      v => if (lCols.contains(v)) Some(l(v)) else None,
+      v => if (shared.contains(v)) Some(rr(s"__r_$v"))
+           else if (rCols.contains(v)) Some(rr(v)) else None,
+      assuredBoth)
+    val keys = shared.map { v =>
+      val (a, b) = (l(v), rr(s"__r_$v"))
+      if (assuredBoth(v)) a === b else a.isNull || b.isNull || a === b
+    }
+    val conds = keys ++ cond(sides)
+    val joined =
+      if (conds.isEmpty && joinType == "inner") l.crossJoin(rr)
+      else l.join(rr, conds.reduceOption(_ && _).getOrElse(lit(true)), joinType)
+    if (joinType == "left_semi" || joinType == "left_anti") joined
+    else joined.select((lCols ++ rCols.filterNot(shared.contains))
+      .map(v => sides.merged(v).get.as(v)): _*)
+  }
+
+  /** MINUS: drop left rows compatible with some right row that share at
+    * least one var bound on both (disjoint-domain rows survive — the
+    * semantics the reference does not implement, README.md:57-58;
+    * SURVEY.md §2.3). An assured-on-both key is that witness already. */
+  private[graft] def minus(l: DataFrame, r: DataFrame,
+                           lAssured: Set[String], rAssured: Set[String]): DataFrame = {
+    val shared = l.columns.toSeq.filter(r.columns.contains)
+    if (shared.isEmpty) l
+    else compatJoin(l, r, lAssured, rAssured, "left_anti") { s =>
+      if (shared.exists(v => lAssured(v) && rAssured(v))) None
+      else Some(shared.map(v =>
+        s.left(v).get.isNotNull && s.right(v).get.isNotNull).reduce(_ || _))
+    }
+  }
 
   /** Bag UNION, each side padded to the union of both column sets with
     * `nullCol` (unbound: a NULL term struct, or a NULL id). */
@@ -697,8 +766,9 @@ final class Compiler(quads: DataFrame) {
       }
       spark.createDataFrame(data, schema)
 
-    case Join(l, r) => joinCompat(compileV(l), compileV(r), vars(l), vars(r),
-      assuredVars(l), assuredVars(r), "inner", None)
+    case Join(l, r) =>
+      Compiler.compatJoin(compileV(l), compileV(r), assuredVars(l),
+        assuredVars(r), "inner")(_ => None)
 
     case LeftJoin(l, r, cond) =>
       // [NOT] EXISTS conjuncts in an OPTIONAL's condition can't ride the
@@ -718,13 +788,19 @@ final class Compiler(quads: DataFrame) {
               "variables that are not assured-bound in the optional pattern")
         AFilter(acc, e)
       }
-      joinCompat(compileV(l), compileV(r2), vars(l), vars(r2),
-        assuredVars(l), assuredVars(r2), "left_outer",
-        scalarCs.reduceOption((a, b) => FuncE("&&", List(a, b))))
+      // the scalar condition evaluates on the MERGED row (the
+      // spec-correct OPTIONAL-with-FILTER the reference approximates by
+      // pre-filtering the right side, Interpreter.scala:467-479)
+      Compiler.compatJoin(compileV(l), compileV(r2), assuredVars(l),
+        assuredVars(r2), "left_outer") { s =>
+        val ec = new ExprCompiler(v => s.merged(v).getOrElse(nullTerm))
+        scalarCs.map(ec.bool).reduceOption(_ && _)
+      }
 
     case Union(l, r) => Compiler.unionPadded(compileV(l), compileV(r), nullTerm)
 
-    case Minus(l, r) => compileMinus(l, r)
+    case Minus(l, r) =>
+      Compiler.minus(compileV(l), compileV(r), assuredVars(l), assuredVars(r))
 
     case AFilter(child, cond) => compileFilter(child, cond)
 
@@ -842,71 +918,6 @@ final class Compiler(quads: DataFrame) {
       .map { case (n, c) => col(c).as(n) }.toIndexedSeq: _*)
   }
 
-  // ----- joins -----
-  /** Compatible-bindings join: assured∩assured vars are equi keys
-    * (null-safe), other shared vars get NULL-matches-anything, the
-    * optional scalar condition is evaluated on the MERGED row (this is
-    * the spec-correct OPTIONAL-with-FILTER the reference approximates
-    * by pre-filtering the right side, Interpreter.scala:467-479). */
-  private def joinCompat(l: DataFrame, r0: DataFrame,
-                         lVars: Set[String], rVars: Set[String],
-                         lAssured: Set[String], rAssured: Set[String],
-                         joinType: String, cond: Option[Expr]): DataFrame = {
-    val shared = (lVars intersect rVars).toSeq.sorted
-    val rename = shared.map(v => v -> s"__r_$v").toMap
-    val r = rename.foldLeft(r0) { case (d, (v, rv)) => d.withColumnRenamed(v, rv) }
-
-    val keyConds = shared.map { v =>
-      // assured on both sides ⇒ never NULL ⇒ plain equality, which keeps
-      // the join key a bare column (bucket-join / exchange-reuse
-      // friendly; <=> compiles to coalesce-wrapped keys that defeat it)
-      if (lAssured.contains(v) && rAssured.contains(v)) l(v) === r(rename(v))
-      else l(v).isNull || r(rename(v)).isNull || (l(v) === r(rename(v)))
-    }
-    val mergedCol: String => Column = v =>
-      if (rename.contains(v)) coalesce(l(v), r(rename(v)))
-      else if (lVars.contains(v)) l(v)
-      else if (r.columns.contains(v)) r(v)
-      else nullTerm
-    val condCol = cond.map(e => new ExprCompiler(mergedCol).bool(e))
-    val allConds = keyConds ++ condCol.toSeq
-    val joinCond = allConds.reduceOption(_ && _).getOrElse(lit(true))
-
-    val joined =
-      if (shared.isEmpty && cond.isEmpty && joinType == "inner") l.crossJoin(r)
-      else l.join(r, joinCond, joinType)
-    val outVars = (lVars ++ rVars).toSeq.distinct
-    joined.select(outVars.map(v => mergedCol(v).as(v)): _*)
-  }
-
-  // ----- MINUS -----
-  /** MINUS: drop left rows that are compatible with some right row AND
-    * share at least one mutually-bound variable (disjoint-domain rows
-    * survive — the semantics the reference doesn't implement at all,
-    * README.md:57-58; SURVEY.md §2.3). */
-  private def compileMinus(l: Op, r: Op): DataFrame = {
-    val ld = compileV(l)
-    val rd0 = compileV(r)
-    val shared = (vars(l) intersect vars(r)).toSeq.sorted
-    if (shared.isEmpty) return ld
-    val (lA, rA) = (assuredVars(l), assuredVars(r))
-    val assuredBoth = shared.filter(v => lA.contains(v) && rA.contains(v))
-    val rename = shared.map(v => v -> s"__r_$v").toMap
-    val rd = rename.foldLeft(rd0) { case (d, (v, rv)) => d.withColumnRenamed(v, rv) }
-    // assured-on-both vars use plain equality → extractable equi keys →
-    // hash/sort-merge anti join instead of a nested-loop join; they also
-    // witness "at least one mutually bound var" for free
-    val conds = shared.map { v =>
-      if (assuredBoth.contains(v)) ld(v) === rd(rename(v))
-      else ld(v).isNull || rd(rename(v)).isNull || (ld(v) === rd(rename(v)))
-    }
-    val anyBothBound =
-      if (assuredBoth.nonEmpty) lit(true)
-      else shared.map(v =>
-        ld(v).isNotNull && rd(rename(v)).isNotNull).reduce(_ || _)
-    ld.join(rd, conds.reduce(_ && _) && anyBothBound, "left_anti")
-  }
-
   // ----- FILTER (incl. EXISTS / NOT EXISTS lowering) -----
   private def compileFilter(child: Op, cond: Expr): DataFrame = {
     val (existsConjs, scalarConjs) =
@@ -998,30 +1009,14 @@ final class Compiler(quads: DataFrame) {
       case _ => ()
     }
     checkResidual(cleaned)
-    val sub0 = compileV(cleaned)
-    val subVars = vars(cleaned)
-    val shared = (leftVars intersect subVars).toSeq.sorted
-    val rename = subVars.map(v => v -> s"__e_$v").toMap
-    val sub = rename.foldLeft(sub0) { case (d, (v, rv)) => d.withColumnRenamed(v, rv) }
-
-    // assured-on-both shared vars join with plain equality so Spark can
-    // extract equi keys (hash/sort-merge semi/anti join); the compat
-    // form would force a nested-loop join over the full cross product
-    val subAssured = assuredVars(cleaned)
-    val compat = shared.map { v =>
-      if (leftAssured.contains(v) && subAssured.contains(v))
-        left(v) === sub(rename(v))
-      else
-        left(v).isNull || sub(rename(v)).isNull || (left(v) === sub(rename(v)))
+    // the lifted conjuncts read the merged row, so a var the outer row
+    // binds is its outer value wherever the inner pattern leaves it
+    // unbound — substitute() semantics
+    Compiler.compatJoin(left, compileV(cleaned), leftAssured,
+      assuredVars(cleaned), if (negated) "left_anti" else "left_semi") { s =>
+      val ec = new ExprCompiler(v => s.merged(v).getOrElse(nullTerm))
+      correlated.map(ec.bool).reduceOption(_ && _)
     }
-    val env: String => Column = n =>
-      if (subVars.contains(n)) sub(rename(n))
-      else if (left.columns.contains(n)) left(n)
-      else nullTerm
-    val corrConds = correlated.map(e => new ExprCompiler(env).bool(e))
-    val allConds = compat ++ corrConds
-    val joinCond = allConds.reduceOption(_ && _).getOrElse(lit(true))
-    left.join(sub, joinCond, if (negated) "left_anti" else "left_semi")
   }
 
   // ----- GROUP + aggregates -----

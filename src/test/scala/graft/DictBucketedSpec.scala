@@ -107,6 +107,38 @@ class DictBucketedSpec extends SparqlSpecBase {
       include("Bucketed: true")
   }
 
+  /** A bucketed block whose s–s joins all stay exchange-free: exactly
+    * one probe-side exchange per kept (materialized) var remains. */
+  private def probeExchangesOnly(q: String, kept: Int): Unit = {
+    same("optionals.ttl", q)
+    noBroadcast {
+      val df = blockDf(bothStores("optionals.ttl")._1, q)
+      val plan = df.queryExecution.executedPlan.toString
+      withClue(plan) {
+        exchanges(df) shouldBe kept
+        // no exchange hashes the subject key `x` (`__r_x` on a right side)
+        raw"Exchange hashpartitioning\((__r_)?x#".r.findAllIn(plan) shouldBe empty
+      }
+    }
+  }
+
+  it should "keep a 3-scan star's chained s–s joins exchange-free" in {
+    // the second join keys on the first join's output `x`: projecting
+    // it as coalesce(l, r) would lose the bucketing and add exchanges
+    probeExchangesOnly(
+      """PREFIX foaf: <http://xmlns.com/foaf/0.1/>
+        |PREFIX rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#>
+        |SELECT ?t ?n ?m { ?x rdf:type ?t . ?x foaf:name ?n . ?x foaf:mbox ?m }""".stripMargin,
+      kept = 3)
+  }
+
+  it should "keep an OPTIONAL spine's s–s join exchange-free" in {
+    probeExchangesOnly(
+      """PREFIX foaf: <http://xmlns.com/foaf/0.1/>
+        |SELECT ?n ?m { ?x foaf:name ?n OPTIONAL { ?x foaf:mbox ?m } }""".stripMargin,
+      kept = 2)
+  }
+
   it should "never shuffle the dictionary side of materialization joins" in noBroadcast {
     val (bucketed, _) = bothStores("optionals.ttl")
     // single kept var → one materialization join; assert the plan has

@@ -1,5 +1,9 @@
 package graft
 
+import graft.io.QuadsIO
+import graft.rdf.TurtleParser
+import graft.sparql.Sparql._
+
 /** FILTER / EXISTS / NOT EXISTS / MINUS — ports reference
   * FilterTest.scala, including the correlated-inner-filter and MINUS
   * cases the reference itself cannot run (SURVEY.md §5.6). */
@@ -73,6 +77,22 @@ class FilterSpec extends SparqlSpecBase {
         |}""".stripMargin
     check("inner_filter.ttl", q, Seq(
       Map("x" -> iri("http://example.com/b"), "n" -> dec("3.0"))))
+  }
+
+  it should "give a lifted correlated FILTER the outer binding the inner pattern leaves unbound" in {
+    // EXISTS substitutes the outer ?v = 5 into its pattern, so the
+    // FILTER sees 5 even though the { ?y :s ?z } branch — the one :b
+    // matches — does not bind ?v: :a :q :b and :b :s :c make it true
+    val data = QuadsIO.fromQuads(spark, TurtleParser.parse(
+      """@prefix : <http://example/> .
+        |:a :p 5 . :a :q :b . :b :s :c .""".stripMargin))
+    val q =
+      """PREFIX : <http://example/>
+        |SELECT ?x {
+        |  ?x :p ?v
+        |  FILTER EXISTS { { ?x :q ?y FILTER(?v > 1) } { ?y :r ?v } UNION { ?y :s ?z } }
+        |}""".stripMargin
+    assertResult(collect(data.sparql(q)), Seq(Map("x" -> iri("http://example/a"))))
   }
 
   "MINUS" should "remove compatible rows but keep disjoint domains" in {

@@ -129,4 +129,33 @@ class LayoutSpec extends AnyFlatSpec with Matchers {
     n shouldBe 2
     spark.read.parquet(out).count() shouldBe 20000
   }
+
+  "q_compact scatter fixture" should "build the scatter once, behind a _DONE marker written last" in {
+    // the fixture goes through the shared buildOnce helper (keyed
+    // path, marker written last), so a second run rewrites nothing
+    val dir = java.nio.file.Files.createTempDirectory("layout-compact").toString
+    (0L until 200L).map(i =>
+        (i, i % 7, (i % 13).toDouble, i * 1000000L, s"t${i % 3}", "{}"))
+      .toDF("event_id", "user_id", "value", "ts", "event_type", "props")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+
+    val fixture = new java.io.File(SparkEntry.tmpPath("compact_in", dir))
+    def scatterMtimes: Map[String, Long] = {
+      val sc = new java.io.File(fixture, "scatter")
+      sc.listFiles().filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getName -> f.lastModified()).toMap
+    }
+
+    val first = SparkEntry.queries("q_compact")(spark, dir)
+    val n1 = first.agg(sum("n")).collect()(0).getLong(0)
+    n1 shouldBe 200L
+    new java.io.File(fixture, "_DONE") should exist
+    val mt = scatterMtimes
+    mt should not be empty
+
+    val second = SparkEntry.queries("q_compact")(spark, dir)
+    val n2 = second.agg(sum("n")).collect()(0).getLong(0)
+    n2 shouldBe 200L
+    scatterMtimes shouldBe mt // fixture untouched on the second pass
+  }
 }

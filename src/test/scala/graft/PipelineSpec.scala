@@ -186,6 +186,24 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
     j shouldBe 1.0 +- 1e-9
   }
 
+  it should "share a byte-identical hash-family CTE prefix between the all-pairs and incremental oracles" in {
+    // the all-pairs oracle is built on the incremental oracle's shared
+    // CTE helper, so the portable hash-family SQL exists once
+    val allPairs = SparkEntry.oracleSql("q_dedup_minhash_portable")
+    val incr = SparkEntry.oracleSql("q_dedup_incr_portable")
+    // both open with WITH <shared CTEs>, and the shared prefix runs
+    // through the end of the `bands` CTE — the whole hash family
+    val bandsEnd = "GROUP BY doc_id, i // "
+    val cut = allPairs.indexOf(bandsEnd)
+    cut should be > 0
+    val prefixEnd = allPairs.indexOf(")", cut)
+    val prefix = allPairs.substring(0, prefixEnd + 1)
+    incr should startWith(prefix)
+    // and the family appears exactly once per oracle (no duplicated body)
+    allPairs.sliding("mh AS (".length).count(_ == "mh AS (") shouldBe 1
+    incr.sliding("mh AS (".length).count(_ == "mh AS (") shouldBe 1
+  }
+
   "incremental dedup" should "find cross-batch near-dups against a signed corpus only" in {
     // corpus: docs 1-3; new batch: 10 (near-dup of 1), 11 (unrelated).
     // Within-corpus and within-batch pairs must NOT be reported.
@@ -580,6 +598,16 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
       Multimodal.mediaSchema)
     val r = Multimodal.resize(media, 224, 224).select("meta.width", "meta.height").head()
     (r.getInt(0), r.getInt(1)) shouldBe ((224, 224))
+  }
+
+  it should "leave the process-global ImageIO stream cache off after any codec touch" in {
+    // both ImageIO-touching codecs run the shared Multimodal init in
+    // their own initializer, so neither depends on the other being
+    // loaded first
+    graft.pipeline.Multimodal.VideoCodec.featureDim shouldBe 8
+    javax.imageio.ImageIO.getUseCache shouldBe false
+    graft.pipeline.Multimodal.ImageCodec.featureDim shouldBe 8
+    javax.imageio.ImageIO.getUseCache shouldBe false
   }
 
   private def pngBytes(w: Int, h: Int, rgb: Int): Array[Byte] = {

@@ -183,4 +183,31 @@ class TextStatsSpec extends AnyFlatSpec with Matchers {
       .filter(!(col("c_direct") <=> col("c_derived")))
       .count() shouldBe 0L
   }
+
+  "tokenPairs" should "survive the child array's backing buffer being reused" in {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val proj = UnsafeProjection.create(
+      Array[DataType](ArrayType(StringType, containsNull = false)))
+    def input(ws: String*) = InternalRow(
+      new GenericArrayData(ws.map(UTF8String.fromString).toArray[Any]))
+    // UnsafeProjection reuses its output buffer across applies, so
+    // arr's UTF8Strings are views into that buffer: tokenPairs must
+    // copy its tokens to the heap
+    val row = proj(input("alpha", "beta", "gamma"))
+    val arr = row.getArray(0)
+    val pairs = graft.functions.TextStatsExprs.tokenPairs(arr)
+    pairs.numElements() shouldBe 2
+    // overwrite the shared buffer with different, same-length tokens
+    proj(input("XXXXX", "YYYY", "ZZZZZ"))
+    val p0 = pairs.getStruct(0, 2)
+    val p1 = pairs.getStruct(1, 2)
+    p0.getUTF8String(0).toString shouldBe "alpha"
+    p0.getUTF8String(1).toString shouldBe "beta"
+    p1.getUTF8String(0).toString shouldBe "beta"
+    p1.getUTF8String(1).toString shouldBe "gamma"
+  }
 }
